@@ -245,12 +245,11 @@ object CatalogIO {
         * Iceberg-Spark mapping. The parquet files store fixed[16] with
         * the UUID annotation, which Spark's stock reader serves only
         * as binary, so scans route through the conversion seam
-        * ([[graft.sources.GraftUuidTable]] / the DataFrame-face
-        * projection); bounds stay un-decoded (pruning costs only). */
+        * ([[graft.sources.GraftUuidTable]], on both faces); bounds
+        * stay un-decoded (pruning costs only). */
       uuidColumns: Seq[String] = Nil) {
     // round 19 (judge r18 #3): uuid COMPOSES with per-file constant
-    // fills — the conversion wraps each fill group's parquet scan
-    // (SQL face) / folds above the group read (DataFrame face), so
+    // fills — the conversion wraps each fill group's parquet scan, so
     // partitioned hive imports with uuid key columns serve. uuid also
     // composes with live DELETES (late round 19): the MOR wrapper
     // plans INSIDE the conversion seam over the physical (binary)
@@ -499,16 +498,6 @@ object CatalogIO {
     def posDeletesFor(relFile: String, fileSeq: Int): Seq[String] =
       posByTarget.getOrElse(relFile, Nil) ++
         untargetedPos.collect { case (p, s) if fileSeq < s => p }
-    /** (absolute path, encoded stats) per data file, when this version
-      * records per-file stats (`""` = no stats for that file). */
-    def absoluteDataFilesWithStats: Option[Seq[(String, String)]] =
-      for { fs <- dataFiles; ss <- dataFileStats } yield
-        fs.map(f => new Path(dataLocation, f).toString).zip(ss)
-    /** (absolute path, encoded NDV sketches) per data file, when this
-      * version records them (`""` = no sketch for that file). */
-    def absoluteDataFilesWithNdv: Option[Seq[(String, String)]] =
-      for { fs <- dataFiles; ss <- dataFileNdv } yield
-        fs.map(f => new Path(dataLocation, f).toString).zip(ss)
     /** (absolute path, size in bytes) per data file when this version
       * records COMPLETE sizes (every entry known) — the contract split
       * planning needs: a single unknown (-1) entry drops the whole
@@ -3166,17 +3155,19 @@ object CatalogIO {
     *    as-is — no data conversion);
     *
     * and the groups union back together. Typically two groups: pre-
-    * change files and post-change appends. */
+    * change files and post-change appends.
+    *
+    * Plain parquet/ORC layouts and this parquet join path stay V1
+    * (`spark.read`); every other shape plans the table
+    * [[graft.sources.ReadRoute.of]] picks — the SQL face's own scan. */
   private[graft] def scanLayoutWithOptions(spark: SparkSession,
       layout: TableLayout, options: Map[String, String]): DataFrame = {
     def reader = {
       val r = spark.read.options(options)
       layout.schemaDdl.fold(r)(ddl => r.schema(ddl))
     }
-    // format dispatch (round 14): ORC layouts (converted Iceberg tables
-    // with ORC data files) read through Spark's ORC source; they are
-    // delete-free and rename-free by TableLayout's invariant, so the
-    // seq-gated branch below never sees one
+    // format dispatch (round 14): plain ORC layouts (converted Iceberg
+    // tables with ORC data files) read through Spark's ORC source
     def load(r: org.apache.spark.sql.DataFrameReader, paths: Seq[String]) =
       layout.dataFormat match {
         case "orc" => r.orc(paths: _*)
@@ -3190,71 +3181,15 @@ object CatalogIO {
             s"Empty manifest with no recorded schema at ${layout.dataLocation}")))
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      // ORC + live deletes (round 16): the join-based application below
-      // captures row addresses via `_metadata.row_index`, which Spark's
-      // file sources expose for PARQUET only — ORC layouts route through
-      // the DSv2 merge-on-read machinery instead (whole-file counting
-      // reads, the exact scan the SQL face plans), so both faces share
-      // one delete-application implementation for ORC. Rename-only ORC
-      // layouts (no deletes — the combination refuses upstream) route
-      // to the SAME epoch machinery the SQL face plans, for the same
-      // reason: the per-group read below is spark.read.parquet-shaped.
-      // uuid + live deletes (late round 19): the SAME DSv2 scan the SQL
-      // face plans — the MOR wrapper inside the conversion seam, binary
-      // probe space — via the registry bridge (the join path below
-      // reads the served STRING schema, which the binary files refuse)
-      case Some(_) if layout.seqGated && layout.uuidColumns.nonEmpty =>
-        graft.sources.MorTableProvider.loadDataFrame(spark,
-          new graft.sources.GraftUuidTable(spark,
-            s"graft-uuid-mor-df(${layout.deleteFiles.size} deletes)",
-            layout, options))
-      case Some(_) if layout.seqGated && layout.dataFormat == "orc" =>
-        if (layout.deleteFiles.nonEmpty && layout.renameOps.nonEmpty)
-          // renames + deletes (round 20): per-epoch MOR composition
-          graft.sources.EpochMorRead.dataFrame(spark, layout, options)
-        else if (layout.deleteFiles.nonEmpty)
-          graft.sources.MorRead.dataFrame(spark, layout, options)
-        else graft.sources.EpochRead.dataFrame(spark, layout, options)
-      // AVRO + live deletes (round 19 — judge r18 #4): the SAME DSv2
-      // counting-read scan the SQL face plans (AvroMorScan), via the
-      // registry bridge — `_metadata.row_index` is parquet-only, and
-      // the engine's avro decoder is the only avro reader here.
-      // Rename-only avro layouts (round 20) ride the SAME epoch
-      // machinery the SQL face plans (the avro decoder resolves fields
-      // by name per epoch); renames + deletes on avro refuses inside
-      // the epoch-MOR composition with compaction named.
-      case Some(_) if layout.seqGated && layout.dataFormat == "avro" =>
-        if (layout.deleteFiles.nonEmpty && layout.renameOps.nonEmpty)
-          graft.sources.EpochMorRead.dataFrame(spark, layout, options)
-        else if (layout.deleteFiles.nonEmpty)
-          graft.sources.AvroMorRead.dataFrame(spark, layout, options)
-        else graft.sources.EpochRead.dataFrame(spark, layout, options)
-      // MIXED + live deletes (round 18 — the one-commit Flink upsert
-      // on a migrated ORC base): split into per-format restricted
-      // layouts and recurse — each group rides this function's own
-      // parquet/orc delete machinery; targets/tuple/seq gates only
-      // ever match within the owning group's files. Mixed + RENAMES
-      // rides the same recursion (late round 20): each format
-      // sub-layout keeps the rename ops and routes through its own
-      // format's epoch machinery.
-      case Some(_) if layout.seqGated && layout.dataFormat == "mixed" =>
-        layout.dataFiles.getOrElse(Nil)
-          .zip(layout.dataFileFormats.getOrElse(Nil))
-          .groupBy(_._2).toSeq.sortBy(_._1)
-          .map { case (fmt, pairs) =>
-            scanLayoutWithOptions(spark,
-              layout.retainDataFiles(pairs.map(_._1).toSet)
-                .copy(dataFormat = fmt, dataFileFormats = None), options)
-          }.reduce(_ unionByName _)
-      // delete-live layouts WITH per-file constant fills (round 16 —
-      // the partitioned Hive-migration table taking row-level deletes):
-      // the parquet join path below reads all files in one pass, where
-      // a per-file constant cannot be threaded — route through the
-      // SAME DSv2 merge-on-read machinery the SQL face plans, which
-      // injects the fills below its probes
-      case Some(_) if layout.seqGated && layout.hasFills =>
-        graft.sources.MorRead.dataFrame(spark, layout, options)
-      case Some(filesWithSeqs) if layout.seqGated =>
+      // parquet + live deletes / renames with neither fills nor uuid
+      // columns: the join-based application below. It captures row
+      // addresses via `_metadata.row_index` (parquet-only) and is the
+      // read compaction and copy-on-write snapshots ride — past the
+      // broadcast threshold it falls back to a shuffled anti join
+      // instead of refusing.
+      case Some(filesWithSeqs) if layout.seqGated &&
+          layout.dataFormat == "parquet" && !layout.hasFills &&
+          layout.uuidColumns.isEmpty =>
         val schema = org.apache.spark.sql.types.StructType.fromDDL(
           layout.schemaDdl.getOrElse(throw new IllegalStateException(
             s"Seq-gated manifest with no recorded schema at ${layout.dataLocation}")))
@@ -3312,150 +3247,15 @@ object CatalogIO {
               .drop("__graft_file", "__graft_pos")
           }
         }.reduce(_ unionByName _)
-      case Some(filesWithSeqs) if layout.hasFills =>
-        // per-file constant fills (v3 initial-defaults / identity
-        // partition values): group files by (fill set, format) — MIXED
-        // parquet+orc layouts ride here too (round 16, the partitioned
-        // Hive-migration append shape); each group reads under the full
-        // schema (absent columns surface as NULL) and the fill
-        // OVERWRITES the column with the constant — sound because a
-        // filled file provably lacks the column, so there are no real
-        // values to clobber. Catalyst folds filters on the lit()
-        // constants, so a partition filter prunes whole groups for free.
-        val fmts: Seq[String] = layout.dataFileFormats.getOrElse(
-          Seq.fill(filesWithSeqs.size)(layout.dataFormat))
-        val groups = filesWithSeqs.map(_._1)
-          .zip(layout.dataFileFills.get).zip(fmts)
-          .groupBy { case ((_, fills), fmt) => (fills, fmt) }.toSeq
-          .sortBy { case ((fills, fmt), _) =>
-            (fills.map(_._1).mkString(","), fmt) }
-        // read nullable-forced: a REQUIRED column with a default is
-        // physically absent from pre-addition files, and the strict
-        // schema would refuse the scan the fill exists to serve
-        val nullableSchema = graft.sources.FillInjection.deepNullable(
-          org.apache.spark.sql.types.StructType
-            .fromDDL(layout.schemaDdl.getOrElse(throw new IllegalStateException(
-              s"fill layout with no recorded schema at ${layout.dataLocation}"))))
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        // uuid + fills (round 19): the files store fixed[16] (binary
-        // to the stock reader) — read the uuid columns as BINARY and
-        // convert to the canonical string ABOVE the group read, before
-        // the fills fold. Round 20: a uuid column may itself BE a fill
-        // column — its files lack it (binary read → NULL, conversion
-        // NULL-preserving) and the fold below overwrites with the
-        // canonical-string fill value, which is already in served form
-        val readSchema =
-          if (layout.uuidColumns.isEmpty) nullableSchema
-          else org.apache.spark.sql.types.StructType(
-            nullableSchema.fields.map(f =>
-              if (layout.uuidColumns.contains(f.name) &&
-                  f.dataType == org.apache.spark.sql.types.StringType)
-                f.copy(dataType = org.apache.spark.sql.types.BinaryType)
-              else f))
-        // NO basePath: a basePath makes Spark infer partition columns
-        // from `col=value` directory names — double-serving the fill
-        // columns and conflicting when snapshots nest at different
-        // depths (imported tree + appended `data/sN/col=v`); the
-        // manifest is the single source of truth here
-        groups.map { case ((fills, fmt), triples) =>
-          val paths = triples.map(_._1._1)
-          val df0 = fmt match {
-            case "orc" => spark.read.options(options).schema(readSchema)
-              .orc(paths: _*)
-            // avro fills (round 19): the engine's sync-split reader
-            // NULL-fills absent fields; constants overwrite below
-            case "avro" =>
-              val keep = paths.toSet
-              graft.sources.AvroRead.dataFrame(spark, readSchema,
-                layout.absoluteDataFilesWithSizes.getOrElse(
-                  throw new IllegalStateException(
-                    s"fill layout has avro files but incomplete sizes " +
-                      s"at ${layout.dataLocation}"))
-                  .filter { case (p, _) => keep(p) },
-                options,
-                layout.absoluteDataFilesWithStats
-                  .map(_.collect { case (p, s) if s.nonEmpty && keep(p) =>
-                    p -> s }.toMap)
-                  .getOrElse(Map.empty))
-            case _ => spark.read.options(options).schema(readSchema)
-              .parquet(paths: _*)
-          }
-          val converted = layout.uuidColumns.foldLeft(df0)((d, c) =>
-            d.withColumn(c, uuidStringColumn(d.col(c))))
-          fills.foldLeft(converted) { case (d, (c, v)) =>
-            applyFillColumn(d, c, v)
-          }
-        }.reduce(_ unionByName _)
-      case Some(_) if layout.dataFormat == "mixed" =>
-        // mixed parquet/orc/avro (round 15): one reader per format
-        // group over that group's manifest slice, unioned — the same
-        // grouping the DSv2 face plans ([[graft.sources
-        // .GraftMixedFormatTable]])
-        val schema = org.apache.spark.sql.types.StructType.fromDDL(
-          layout.schemaDdl.getOrElse(throw new IllegalStateException(
-            s"mixed-format layout with no recorded schema at ${layout.dataLocation}")))
-        val absWithFmt = layout.absoluteDataFiles.get
-          .zip(layout.dataFileFormats.get)
-        absWithFmt.groupBy(_._2).toSeq.sortBy(_._1).map { case (fmt, pairs) =>
-          val paths = pairs.map(_._1)
-          fmt match {
-            case "avro" =>
-              val keep = paths.toSet
-              graft.sources.AvroRead.dataFrame(spark, schema,
-                layout.absoluteDataFilesWithSizes.getOrElse(
-                  throw new IllegalStateException(
-                    s"mixed-format layout has avro files but incomplete " +
-                      s"sizes at ${layout.dataLocation}"))
-                  .filter { case (p, _) => keep(p) },
-                options,
-                layout.absoluteDataFilesWithStats
-                  .map(_.collect { case (p, s) if s.nonEmpty && keep(p) =>
-                    p -> s }.toMap)
-                  .getOrElse(Map.empty))
-            case fmt2 =>
-              val r0 = spark.read.options(options).schema(schema)
-              val r1 = if (layout.suppressBasePath) r0
-                else r0.option("basePath", layout.dataLocation)
-              if (fmt2 == "orc") r1.orc(paths: _*) else r1.parquet(paths: _*)
-          }
-        }.reduce(_ unionByName _)
-      case Some(_) if layout.dataFormat == "avro" =>
-        // avro has no Spark DataFrameReader face in this environment —
-        // the engine's own reader decodes records task-side
-        // ([[graft.sources.AvroRead]]); the sizes helper enforces the
-        // complete-sizes contract (a -1 size would silently drop rows).
-        // Round 15: this face is the SAME DSv2 scan as the SQL face, so
-        // sync-marker splits and manifest-bounds pruning apply here too.
-        graft.sources.AvroRead.dataFrame(spark,
-          org.apache.spark.sql.types.StructType.fromDDL(
-            layout.schemaDdl.getOrElse(throw new IllegalStateException(
-              s"avro layout with no recorded schema at ${layout.dataLocation}"))),
-          layout.absoluteDataFilesWithSizes.getOrElse(
-            throw new IllegalStateException(
-              s"avro layout with incomplete file sizes at ${layout.dataLocation}")),
-          options,
-          layout.absoluteDataFilesWithStats
-            .map(_.collect { case (p, s) if s.nonEmpty => p -> s }.toMap)
-            .getOrElse(Map.empty))
-      // uuid layouts (round 18): read the fixed[16] columns as BINARY
-      // (the only stock-reader mapping) and serve the canonical string
-      // via codegen'd builtins — hex + one regexp + lower, NULL-
-      // preserving. Delete/rename/fill combos refuse at the layout.
-      case Some(filesWithSeqs) if layout.uuidColumns.nonEmpty =>
-        val served = org.apache.spark.sql.types.StructType.fromDDL(
-          layout.schemaDdl.getOrElse(throw new IllegalStateException(
-            s"uuid layout with no recorded schema at ${layout.dataLocation}")))
-        val physical = org.apache.spark.sql.types.StructType(
-          served.fields.map(f =>
-            if (layout.uuidColumns.contains(f.name))
-              f.copy(dataType = org.apache.spark.sql.types.BinaryType)
-            else f))
-        val r = spark.read.options(options).schema(physical)
-        val df0 = load(if (layout.suppressBasePath) r
-          else r.option("basePath", layout.dataLocation),
-          filesWithSeqs.map(_._1))
-        layout.uuidColumns.foldLeft(df0)((d, c) =>
-          d.withColumn(c, uuidStringColumn(d.col(c))))
+      // every other manifest shape — fills, uuid columns, mixed/avro
+      // formats, non-parquet deletes or renames — plans the SAME DSv2
+      // table the SQL face routes to
+      case Some(_) if layout.seqGated || layout.hasFills ||
+          layout.uuidColumns.nonEmpty || layout.dataFormat == "mixed" ||
+          layout.dataFormat == "avro" =>
+        org.apache.spark.sql.GraftFrames.ofTable(spark,
+          graft.sources.ReadRoute.of(s"graft-df(${layout.dataLocation})",
+            layout, options), options)
       case Some(filesWithSeqs) =>
         load(if (layout.suppressBasePath) reader
           else reader.option("basePath", layout.dataLocation),
@@ -3465,26 +3265,8 @@ object CatalogIO {
     }
   }
 
-  /** Canonical uuid text of a 16-byte fixed value column (8-4-4-4-12
-    * lowercase hex), NULL-preserving — codegen'd builtins only.
-    * Round 20 (advisor): non-16-byte values RAISE instead of slipping
-    * through as undashed hex — the regexp used to no-op silently when
-    * `hex(c)` was not exactly 32 chars, turning a corrupt physical
-    * value into a plausible-looking string. */
-  private[graft] def uuidStringColumn(
-      c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{concat, hex, length, lit, lower, raise_error, regexp_replace, when}
-    when(c.isNull, lit(null).cast(org.apache.spark.sql.types.StringType))
-      .otherwise(when(length(c) === 16,
-        lower(regexp_replace(hex(c),
-          "^(.{8})(.{4})(.{4})(.{4})(.{12})$", "$1-$2-$3-$4-$5")))
-        .otherwise(raise_error(concat(
-          lit("uuid column value is not 16 bytes: 0x"), hex(c)))
-          .cast(org.apache.spark.sql.types.StringType)))
-  }
-
-  /** Inverse of [[uuidStringColumn]] for the WRITE faces of adopted
-    * uuid tables (round 20): the served canonical uuid text → the
+  /** Inverse of the uuid seam's text conversion, for the WRITE faces of
+    * adopted uuid tables (round 20): the served canonical uuid text → the
     * 16-byte physical form. NULL-preserving; a value that is not a
     * canonical uuid spelling RAISES per row — `unhex` alone would
     * silently null malformed input, losing the row's key. Codegen'd
@@ -4624,58 +4406,25 @@ object CatalogIO {
       throw new UnsupportedOperationException(
         s"$metadataLocation is not format-version 3; row lineage " +
           "(_row_id / _last_updated_sequence_number) exists from v3"))
-    // ORC (round 19 — judge r18 #5), AVRO, and MIXED v3 tables (round
-    // 20 — judge r19 #2): the join path below captures positions via
-    // `_metadata.row_index`, which Spark's file sources expose for
-    // parquet ONLY — route through the SAME DSv2 counting-read lineage
-    // scan the SQL face plans (the MorRead bridge pattern), selecting
-    // the lineage metadata columns. The base table is only the
-    // non-lineage fallback; the lineage projection always builds the
-    // LineageScan, which dispatches per file format. UUID layouts
-    // (round 20) take this route too — LineageScan threads the
-    // binary-to-string conversion seam (physical reads, binary-space
-    // probes, text at emit) — with GraftUuidTable as the fallback.
-    if (layout.dataFormat != "parquet" || layout.uuidColumns.nonEmpty) {
-      val schema0 = org.apache.spark.sql.types.StructType.fromDDL(
-        layout.schemaDdl.getOrElse(throw new IllegalStateException(
-          s"$metadataLocation has no recorded schema")))
-      val files0 = layout.absoluteDataFiles.getOrElse(Nil)
-      val name = s"graft-lineage-df(${layout.dataFormat}, ${files0.size} files)"
-      val base: org.apache.spark.sql.connector.catalog.Table
-          with org.apache.spark.sql.connector.catalog.SupportsRead =
-        layout.dataFormat match {
-          case _ if layout.uuidColumns.nonEmpty =>
-            new graft.sources.GraftUuidTable(spark, name, layout, Map.empty)
-          case "avro" =>
-            new graft.sources.GraftAvroTable(spark, name, layout, Map.empty)
-          case "mixed" =>
-            new graft.sources.GraftMixedFormatTable(spark, name, layout,
-              Map.empty)
-          case _ =>
-            graft.sources.ManifestFileIndex.tableFor(name, spark, Map.empty,
-              layout).getOrElse {
-              import scala.jdk.CollectionConverters._
-              val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-                (if (layout.suppressBasePath) Map.empty[String, String]
-                 else Map("basePath" -> layout.dataLocation))
-                  .asJava)
-              org.apache.spark.sql.execution.datasources.v2.orc.OrcTable(
-                name, spark, opts, files0,
-                userSpecifiedSchema = Some(schema0),
-                fallbackFileFormat = classOf[org.apache.spark.sql.execution
-                  .datasources.orc.OrcFileFormat])
-            }
-        }
-      return graft.sources.MorTableProvider.loadDataFrame(spark,
-        new graft.sources.GraftLineageTable(base, spark, name, layout,
-          Map.empty))
-        .select((schema0.fieldNames.toSeq ++
-          Seq("_row_id", "_last_updated_sequence_number"))
-          .map(org.apache.spark.sql.functions.col): _*)
-    }
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       layout.schemaDdl.getOrElse(throw new IllegalStateException(
         s"$metadataLocation has no recorded schema")))
+    // ORC (round 19 — judge r18 #5), AVRO, and MIXED v3 tables (round
+    // 20 — judge r19 #2): the join path below captures positions via
+    // `_metadata.row_index`, which Spark's file sources expose for
+    // parquet ONLY — plan the SAME routed table the SQL face serves and
+    // select the lineage metadata columns, which always builds the
+    // counting-read LineageScan (per-file format dispatch). UUID
+    // layouts (round 20) take this route too — LineageScan threads the
+    // binary-to-string conversion seam (physical reads, binary-space
+    // probes, text at emit).
+    if (layout.dataFormat != "parquet" || layout.uuidColumns.nonEmpty)
+      return org.apache.spark.sql.GraftFrames.ofTable(spark,
+        graft.sources.ReadRoute.of(s"graft-lineage-df($metadataLocation)",
+          layout, Map.empty), Map.empty)
+        .select((schema.fieldNames.toSeq ++
+          Seq("_row_id", "_last_updated_sequence_number"))
+          .map(org.apache.spark.sql.functions.col): _*)
     val files = layout.absoluteDataFiles.getOrElse(Nil)
     if (files.isEmpty)
       return spark.createDataFrame(

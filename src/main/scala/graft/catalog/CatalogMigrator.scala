@@ -1,6 +1,7 @@
 package graft.catalog
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 import scala.util.matching.Regex
 
 import org.apache.spark.sql.SparkSession
@@ -126,16 +127,8 @@ final class CatalogMigrator(
     val outcomes = spark
       .createDataset(refs.zipWithIndex.map { case (r, i) => (r.toString, i.toLong) })
       .repartition(parallelism)
-      .mapPartitions { it =>
-        val src = CatalogFactory.build(srcCfg)
-        val tgt = CatalogFactory.build(tgtCfg)
-        val processed = mutable.HashSet.empty[Namespace]
-        val out = it.map { case (id, seq) =>
-          attempt(src, tgt, processed, TableRef.parse(id), delete, stacktrace, seq)
-        }.toVector
-        src.close(); tgt.close()
-        out.iterator
-      }
+      .mapPartitions(it => registerPartition(srcCfg, tgtCfg, it.toVector,
+        delete, stacktrace).iterator)
       .collect()
       .sortBy(_.seq)
     outcomes.foreach(o => applyOutcome(TableRef.parse(o.identifier), o))
@@ -199,6 +192,42 @@ object CatalogMigrator {
       }
     }
     MigrationOutcome(ref.toString, seq, isRegistered, deleteFailed, error)
+  }
+
+  /** One partition of [[CatalogMigrator.registerTables]]: build both
+    * clients, attempt every table, close whatever was built. A client
+    * that cannot be built fails the partition's tables SOFT — one
+    * failed-to-register row each, the reference's fail-soft contract —
+    * instead of killing the job; a close failure is logged, never
+    * thrown (every outcome has already committed). */
+  private[catalog] def registerPartition(srcCfg: CatalogConfig,
+      tgtCfg: CatalogConfig, work: Seq[(String, Long)], delete: Boolean,
+      stacktrace: Boolean): Seq[MigrationOutcome] = {
+    var src: Option[Catalog] = None
+    var tgt: Option[Catalog] = None
+    try {
+      src = Some(CatalogFactory.build(srcCfg))
+      tgt = Some(CatalogFactory.build(tgtCfg))
+      val processed = mutable.HashSet.empty[Namespace]
+      work.map { case (id, seq) =>
+        attempt(src.get, tgt.get, processed, TableRef.parse(id), delete,
+          stacktrace, seq)
+      }
+    } catch {
+      case NonFatal(e) if tgt.isEmpty =>
+        val which = if (src.isEmpty) srcCfg.name else tgtCfg.name
+        if (stacktrace) log.error(s"Unable to build the catalog client $which", e)
+        else log.error(s"Unable to build the catalog client $which : ${e.getMessage}")
+        work.map { case (id, seq) =>
+          MigrationOutcome(id, seq, registered = false, deleteFailed = false,
+            Option(e.getMessage))
+        }
+    } finally {
+      (src ++ tgt).foreach { c =>
+        try c.close()
+        catch { case NonFatal(e) => log.warn(s"Failed to close a catalog client: $e") }
+      }
+    }
   }
 
   /** R9: create every namespace prefix, memoized, AlreadyExists swallowed

@@ -1747,7 +1747,7 @@ object IcebergExport {
 
   /** Per-file manifest stats in one normalized shape, keyed by the
     * Iceberg field id (bound values are Spark EXTERNAL types). */
-  private final case class FileExportStats(cnt: Long,
+  private[catalog] final case class FileExportStats(cnt: Long,
       lowers: Map[Int, Any], uppers: Map[Int, Any],
       nulls: Map[Int, Long], nans: Map[Int, Long])
 
@@ -1763,13 +1763,12 @@ object IcebergExport {
       fileFormat: String = "parquet",
       avroResults: Option[Seq[graft.sources.AvroWrite.FileResult]] = None,
       treeOverride: Option[IcebergSchemaIds.Tree] = None,
-      partCols: Seq[PartSpecCol] = Nil,
+      partCols: Seq[PartSpecCol],
       /** The spec id this data manifest commits under (round 18 —
         * spec evolution: loaded tables append under their CURRENT
         * spec; fresh exports under 0). */
       specId: Int = 0)
       : (ListEntry, Long, Long) = {
-    import org.apache.spark.sql.functions._
     // IDENTITY partition columns live in the DIRECTORY NAMES, not the
     // files — their values go into the entry's `partition` record, and
     // no footer-derived bound may claim the column exists inside the
@@ -1789,33 +1788,40 @@ object IcebergExport {
       case Some(rs) => rs.map(r =>
         r.name -> FileExportStats(r.count, r.lowers, r.uppers,
           r.nulls, r.nans)).toMap
-      case None if fileFormat == "parquet" =>
-        // Round 20 (guide §1.2/§6): the write already produced exact
-        // per-file column statistics in every parquet FOOTER — read
-        // those (O(files) metadata reads) instead of re-scanning the
-        // data (a second full pass). Footer decode is type-gated and
-        // falls back to the scan on ANY uncertainty (float/double NaN
-        // counts, possibly-truncated long string bounds, unexpected
-        // physical encodings), so the manifest content is identical to
-        // the scan path's wherever the fast path engages. Measured:
-        // the read-back aggregation was 0.3-0.5 s of every benched
-        // w-row's export at sf0.1.
-        footerExportStats(spark, fs, dataDir, boundCols)
-          .getOrElse(scanExportStats(spark, fs, schema, fieldIds,
-            boundCols, dataDir, fileFormat, partCols))
-      case None =>
-        scanExportStats(spark, fs, schema, fieldIds, boundCols, dataDir,
-          fileFormat, partCols)
+      case None => exportStats(spark, fs, schema, fieldIds, boundCols,
+        dataDir, fileFormat, partCols)
     }
     writeDataManifestTail(fs, metaDir, location, fieldIds, dataDir,
       relPrefix, snapshotId, seq, fileFormat, treeOverride, partCols,
       specId, boundCols, statsByRel)
   }
 
+  /** Per-file export statistics of the parquet/ORC files under
+    * `dataDir`. Round 20 (guide §1.2/§6): for parquet the write already
+    * produced exact per-file column statistics in every FOOTER — read
+    * those (O(files) metadata reads) instead of re-scanning the data (a
+    * second full pass). Footer decode is type-gated and falls back to
+    * the scan on ANY uncertainty (float/double NaN counts,
+    * possibly-truncated long string bounds, unexpected physical
+    * encodings), so the manifest content is identical to the scan
+    * path's wherever the fast path engages. Measured: the read-back
+    * aggregation was 0.3-0.5 s of every benched w-row's export at
+    * sf0.1. */
+  private[catalog] def exportStats(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem,
+      schema: StructType, fieldIds: Seq[(StructField, Int)],
+      boundCols: Seq[(StructField, Int)], dataDir: Path,
+      fileFormat: String, partCols: Seq[PartSpecCol])
+      : Map[String, FileExportStats] =
+    (if (fileFormat == "parquet")
+      footerExportStats(spark, fs, dataDir, boundCols) else None)
+      .getOrElse(scanExportStats(spark, fs, schema, fieldIds, boundCols,
+        dataDir, fileFormat, partCols))
+
   /** The original read-back statistics pass: one aggregation over the
     * written files grouped by file name. Exact for every type; costs a
     * full data read. */
-  private def scanExportStats(spark: SparkSession,
+  private[catalog] def scanExportStats(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem,
       schema: StructType, fieldIds: Seq[(StructField, Int)],
       boundCols: Seq[(StructField, Int)], dataDir: Path,
@@ -1879,7 +1885,7 @@ object IcebergExport {
     * any unexpected physical encoding. Where it engages, the produced
     * manifest is byte-identical to the scan path's (same values, same
     * spec Appendix-D serialization). */
-  private def footerExportStats(spark: SparkSession,
+  private[catalog] def footerExportStats(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, dataDir: Path,
       boundCols: Seq[(StructField, Int)])
       : Option[Map[String, FileExportStats]] = {
@@ -1993,19 +1999,41 @@ object IcebergExport {
       // serial loop of remote footer reads would become the new export
       // bottleneck, and even locally a multi-file export pays file-open
       // latency × files. Order-independent: results key by file name.
+      // The first None or throw decides the whole export (scan
+      // fallback), so it stops the rest: queued decodes check the
+      // shared flag before opening a file, and shutdownNow cancels
+      // what has not started.
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(8, files.length))
+      val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
       val decoded =
         try {
           val futs = files.map { rel =>
             pool.submit(new java.util.concurrent.Callable[Option[(String, FileExportStats)]] {
               override def call(): Option[(String, FileExportStats)] =
-                decodeOne(rel).map(rel -> _)
+                if (failed.get) None
+                else {
+                  val r =
+                    try decodeOne(rel)
+                    catch {
+                      // a fatal error leaves the flag unset so the
+                      // collection loop below reaches and rethrows it
+                      case scala.util.control.NonFatal(e) =>
+                        failed.set(true); throw e
+                    }
+                  if (r.isEmpty) failed.set(true)
+                  r.map(rel -> _)
+                }
             })
           }
-          futs.map(_.get())
-        } finally pool.shutdown()
-      if (decoded.exists(_.isEmpty)) None
+          val out = Vector.newBuilder[Option[(String, FileExportStats)]]
+          val it = futs.iterator
+          while (!failed.get && it.hasNext) out += it.next().get()
+          out.result()
+        } finally {
+          if (failed.get) pool.shutdownNow() else pool.shutdown()
+        }
+      if (failed.get || decoded.exists(_.isEmpty)) None
       else Some(decoded.flatten
         // a 0-row part file has no stats row on the scan path (its
         // groupBy yields nothing), so the footer path must leave it
@@ -2157,7 +2185,7 @@ object IcebergExport {
         * THAT spec's fields (empty for the unpartitioned auxiliary
         * spec global delete manifests ride — round 16; arbitrary ids
         * since round 18's spec-evolution carry). */
-      specId: Int = 0): Unit = {
+      specId: Int): Unit = {
     w.setMeta("schema", schemaJson)
     w.setMeta("partition-spec", s"[${partSpecFieldsJson(partCols)}]")
     w.setMeta("partition-spec-id", specId.toString)
@@ -2265,7 +2293,7 @@ object IcebergExport {
   /** Iceberg schema JSON (metadata document + manifest `schema`
     * metadata both use this form). */
   private def icebergSchemaJson(fieldIds: Seq[(StructField, Int)],
-      treeOverride: Option[IcebergSchemaIds.Tree] = None): String = {
+      treeOverride: Option[IcebergSchemaIds.Tree]): String = {
     // NESTED types export (round 16): the id tree assigns nested
     // member ids deterministically, shared with the metadata schema
     // and the avro writer — see [[IcebergSchemaIds]]; an append to a
@@ -2340,7 +2368,7 @@ object IcebergExport {
       // strings, as real writers record them) — `added-data-files` /
       // `added-files-size` let streaming admission control budget a
       // micro-batch without walking the snapshot's manifests
-      summaryCounts: Map[String, Long] = Map.empty): String =
+      summaryCounts: Map[String, Long]): String =
     s"""{
        |    "sequence-number": $seq,
        |    "snapshot-id": $snapshotId,${parent.fold("")(p =>
@@ -2369,7 +2397,7 @@ object IcebergExport {
       minLastColumnId: Int = 0,
       /** Identity partition-spec columns (round 16); empty = the
         * unpartitioned spec. */
-      partCols: Seq[PartSpecCol] = Nil,
+      partCols: Seq[PartSpecCol],
       /** Round 18 (spec evolution): a LOADED table's partition-specs
         * array rendered VERBATIM, with its default-spec-id — prior
         * manifests keep referencing their own spec ids. None =

@@ -112,6 +112,13 @@ final class NessieCatalog(val name: String, storeDir: String,
     // makes a concurrent bootstrap race benign in both impls.
     if (refs.storeIsVirgin)
       refs.create(DefaultBranch, s"branch $EmptyHash")
+    // the default branch is undeletable, so a non-virgin store without
+    // it is a concurrent client's bootstrap mid-publish (its temp file
+    // already made the dir non-virgin): wait for that publish rather
+    // than fail the first read with "Reference does not exist: main"
+    val deadline = System.currentTimeMillis() + 10000
+    while (!refs.exists(DefaultBranch) && System.currentTimeMillis() < deadline)
+      Thread.sleep(5)
   }
 
   // ----- references -----

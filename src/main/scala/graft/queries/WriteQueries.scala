@@ -1521,7 +1521,7 @@ object WriteQueries {
     * through BOTH faces: the DSv2 SQL face ([[graft.sources
     * .GraftMorTable]] over Spark's OrcScan — whole-file counting reads,
     * data filters withheld for counting soundness and re-applied above)
-    * and the library DataFrame face ([[graft.sources.MorRead]] — ORC has
+    * and the library DataFrame face ([[graft.sources.ReadRoute]] — ORC has
     * no `_metadata.row_index`, so it shares the SAME DSv2 machinery).
     * Relationally a per-parity ROW_NUMBER filter plus a NOT IN,
     * replayed once per face. */

@@ -10,19 +10,17 @@ import org.apache.avro.generic.{GenericDatumReader, GenericFixed, GenericRecord}
 import org.apache.avro.mapred.FsInput
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
-
-import graft.catalog.CatalogIO.TableLayout
 
 /** Native reader for Iceberg tables whose DATA files are Avro object
   * container files (round 14) — the third and last of the spec's data
@@ -34,10 +32,9 @@ import graft.catalog.CatalogIO.TableLayout
   * Both faces plan from the manifest (zero listing) and split files at
   * Avro SYNC markers — `DataFileReader.sync(start)`/`pastSync(end)` is
   * the format's own split contract, so a 1 GB avro file fans out
-  * across tasks exactly like parquet row groups. Since round 15 the
-  * DataFrame face is the SAME DSv2 scan (served through
-  * [[AvroTableProvider]]'s driver-side plan handoff), so both faces
-  * share splits, pruning, and decode. Records decode STRAIGHT to
+  * across tasks exactly like parquet row groups. Both faces plan the
+  * SAME DSv2 scan ([[ReadRoute]]), so they share splits, pruning, and
+  * decode. Records decode STRAIGHT to
   * catalyst internal values (UTF8String / days-int / micros-long /
   * unscaled Decimal) — one conversion, no external-row detour. Values
   * convert per the TABLE schema (Iceberg's avro encoding: date = int
@@ -89,30 +86,6 @@ object AvroRead {
       }
     }
     (it, () => closeNow())
-  }
-
-  /** The DataFrame face: the SAME DSv2 table as the SQL face, handed to
-    * `spark.read.format(...)` through [[AvroTableProvider]]'s plan
-    * registry — sync-marker splits, manifest-bounds pruning, and column
-    * pruning all apply identically on both faces. */
-  def dataFrame(spark: SparkSession, schema: StructType,
-      files: Seq[(String, Long)], options: Map[String, String],
-      statsByPath: Map[String, String] = Map.empty): DataFrame = {
-    val nullable = StructType(schema.fields.map(_.copy(nullable = true)))
-    val table = new GraftAvroTable(spark, s"graft-avro-df(${files.size} files)",
-      nullable, files, statsByPath, options)
-    val key = AvroTableProvider.register(table)
-    // a load() failure between register and the provider's one-shot
-    // take() would strand the entry (table + file list + session ref)
-    // in the registry for the life of the driver (advisor r15 #4) —
-    // deregister on the failure path; success consumed the key already
-    try spark.read.format(classOf[AvroTableProvider].getName)
-      .option(AvroTableProvider.PlanKey, key).load()
-    catch {
-      case e: Throwable =>
-        AvroTableProvider.deregister(key)
-        throw e
-    }
   }
 
   /** Converter for one top-level (or nested) field: resolves the avro
@@ -281,92 +254,15 @@ object AvroRead {
   }
 }
 
-/** DSv2 TableProvider that serves a driver-side [[GraftAvroTable]] by
-  * registry key — the bridge that lets the DataFrame face
-  * (`spark.read.format(...)`) reuse the exact DSv2 scan the SQL face
-  * plans (same sync-marker splits, same internal-row decode), with no
-  * layout re-parse and no file list squeezed through string options.
-  * Keys are one-shot: [[AvroRead.dataFrame]] registers, `load()`
-  * consumes (planning is driver-side; executors only ever see the
-  * serialized [[AvroScan]]). */
-final class AvroTableProvider extends TableProvider {
-  import AvroTableProvider._
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    lookup(options).schema()
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    take(new CaseInsensitiveStringMap(properties))
-
-  override def supportsExternalMetadata(): Boolean = false
-}
-
-object AvroTableProvider {
-  /** Option key carrying the registry handle. */
-  val PlanKey = "graft.avro.plan"
-
-  private val registry =
-    new java.util.concurrent.ConcurrentHashMap[String, GraftAvroTable]()
-
-  private[sources] def register(t: GraftAvroTable): String = {
-    val k = java.util.UUID.randomUUID().toString
-    registry.put(k, t)
-    k
-  }
-
-  /** Failure-path cleanup for [[AvroRead.dataFrame]] (idempotent —
-    * `load()` may already have consumed the key before failing). */
-  private[sources] def deregister(key: String): Unit = registry.remove(key)
-
-  /** Test-only visibility: is the key still registered? */
-  private[sources] def registered(key: String): Boolean =
-    registry.containsKey(key)
-
-  private[sources] def registrySize: Int = registry.size()
-
-  private def lookup(options: CaseInsensitiveStringMap): GraftAvroTable = {
-    val k = options.get(PlanKey)
-    val t = if (k == null) null else registry.get(k)
-    if (t == null) throw new IllegalStateException(
-      "AvroTableProvider is driver-internal: construct reads through " +
-        "graft.sources.AvroRead.dataFrame, not spark.read.format(...)")
-    t
-  }
-
-  /** `getTable` consumes the key (one `load()` per registration) so the
-    * registry never accumulates file lists across a long session. */
-  private def take(options: CaseInsensitiveStringMap): GraftAvroTable = {
-    val t = lookup(options)
-    registry.remove(options.get(PlanKey))
-    t
-  }
-}
-
 /** The DSv2 face: a read-only avro table planned from the manifest. */
 final class GraftAvroTable(spark: SparkSession, tableName: String,
     currentSchema: StructType, sized: Seq[(String, Long)],
-    statsRaw: Map[String, String], hadoopOpts: Map[String, String])
+    /** Per-file pruning stats (manifest bounds) keyed by absolute path —
+      * avro files carry no footer pushdown, so the manifest envelope is
+      * the ONLY file-skipping layer this format gets (empty when
+      * [[ReadRoute.statsPruning]] is off). */
+    statsByPath: Map[String, String], hadoopOpts: Map[String, String])
   extends Table with SupportsRead {
-
-  /** Layout-driven construction (the SQL face): schema from the
-    * recorded DDL, file list + sizes + pruning stats from the
-    * manifest. */
-  def this(spark: SparkSession, tableName: String, layout: TableLayout,
-      hadoopOpts: Map[String, String]) = this(
-    spark, tableName,
-    StructType(StructType.fromDDL(
-      layout.schemaDdl.getOrElse(throw new IllegalStateException(
-        s"avro table $tableName has no recorded schema")))
-      .fields.map(_.copy(nullable = true))),
-    // the helper enforces the complete-sizes contract (a -1 entry would
-    // make a slice's pastSync fire immediately — silent row loss)
-    layout.absoluteDataFilesWithSizes.getOrElse(throw new IllegalStateException(
-      s"avro table $tableName has no complete file-size manifest")),
-    layout.absoluteDataFilesWithStats
-      .map(_.collect { case (p, s) if s.nonEmpty => p -> s }.toMap)
-      .getOrElse(Map.empty),
-    hadoopOpts)
 
   override def name(): String = tableName
   override def schema(): StructType = currentSchema
@@ -374,16 +270,6 @@ final class GraftAvroTable(spark: SparkSession, tableName: String,
   override def partitioning(): Array[Transform] = Array.empty
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
-
-  /** Per-file pruning stats (manifest bounds), keyed by absolute path —
-    * avro files carry no parquet-style footer pushdown, so the
-    * manifest envelope is the ONLY file-skipping layer this format
-    * gets; same kill-switch as the parquet/orc paths. */
-  private def statsByPath: Map[String, String] = {
-    val enabled = spark.conf
-      .getOption("spark.graft.stats.pruning").forall(_ == "true")
-    if (!enabled) Map.empty else statsRaw
-  }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new AvroScanBuilder(spark, tableName, currentSchema, sized, statsByPath,

@@ -11,10 +11,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.execution.datasources.FilePartition
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.execution.vectorized.ConstantColumnVector
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.types._
@@ -93,10 +90,10 @@ final class GraftFillTable(spark: SparkSession, tableName: String,
     layout.dataFileFormats.getOrElse(Seq.fill(n)(layout.dataFormat))
   }
 
-  /** (fill set, format, that group's absolute files) — fill-free groups
-    * first. */
+  /** (fill set, format, that group's segment-relative files) —
+    * fill-free groups first. */
   private val groups: Seq[(Seq[(String, Any)], String, Seq[String])] =
-    layout.absoluteDataFiles.getOrElse(throw new IllegalStateException(
+    layout.dataFiles.getOrElse(throw new IllegalStateException(
       s"fill table $tableName has no file manifest"))
       .zip(layout.dataFileFills.getOrElse(throw new IllegalStateException(
         s"fill table $tableName has no fill sets")))
@@ -107,91 +104,24 @@ final class GraftFillTable(spark: SparkSession, tableName: String,
       .map { case ((fills, fmt), triples) =>
         (fills, fmt, triples.map(_._1._1)) }
 
-  // shared lookups, computed ONCE per table load (not per group — the
-  // group count is O(partitions) on imported hive trees)
-  private lazy val relByAbs: Map[String, String] =
-    layout.absoluteDataFiles.getOrElse(Nil)
-      .zip(layout.dataFiles.getOrElse(Nil)).toMap
-  private lazy val statsByPath: Map[String, String] = {
-    val statsEnabled = spark.conf
-      .getOption("spark.graft.stats.pruning").forall(_ == "true")
-    if (!statsEnabled) Map.empty
-    else layout.absoluteDataFilesWithStats
-      .map(_.collect { case (p, s) if s.nonEmpty =>
-        new org.apache.hadoop.fs.Path(p).toUri.getPath -> s }.toMap)
-      .getOrElse(Map.empty)
-  }
-
-  /** ONE group's stock table — invoked LAZILY per group at scan build
+  /** ONE group's table — invoked LAZILY per group at scan build
     * (round 16): a dropped group (fill constants contradict the pushed
     * filters) never constructs a table, builder, or stats evaluation,
     * so a selective partition filter over a 10k-partition imported
-    * tree plans in O(matching partitions), not O(table).
-    *
-    * Manifest stats still skip whole files per group (a filter on a
-    * NON-fill column prunes like any plain scan). totalDataFiles = -1
-    * disables manifest-ANSWERED aggregates: this builder does not
-    * forward aggregate pushdown, and a per-group answer would be a
-    * partial one anyway. */
+    * tree plans in O(matching partitions), not O(table). The group's
+    * files read under the PHYSICAL schema through
+    * [[ReadRoute.groupTable]] (manifest stats still skip whole files per
+    * group; avro groups — the v3 ADD COLUMN initial-default on an avro
+    * table — decode through the sync-split reader, which NULL-fills
+    * absent fields, and the constant injection wraps it like the
+    * parquet/orc readers). No basePath: the manifest is the single
+    * source of truth for the fill columns — a basePath would make Spark
+    * infer partition columns from `col=value` directory names
+    * ([[TableLayout.suppressBasePath]]). */
   private def groupTable(i: Int): Table with SupportsRead = {
     val (_, fmt, files) = groups(i)
-    // avro fills (round 19 — the v3 ADD COLUMN initial-default on an
-    // avro table): the engine's sync-split avro reader NULL-fills
-    // absent fields, so the constant injection wraps it exactly like
-    // the parquet/orc readers. Its builder IS manifest-planned by
-    // construction (file list + sizes) and does its own envelope-based
-    // stats pruning, so both wraps below are skipped.
-    if (fmt == "avro") {
-      val sized = layout.absoluteDataFilesWithSizes.getOrElse(
-        throw new IllegalStateException(
-          s"fill table $tableName has avro files but no complete " +
-            "file-size manifest"))
-      val keep = files.toSet
-      val statsByAbs = layout.absoluteDataFilesWithStats
-        .map(_.collect { case (p, s) if s.nonEmpty && keep(p) => p -> s }
-          .toMap)
-        .getOrElse(Map.empty)
-      return new GraftAvroTable(spark, s"$tableName@fill",
-        currentSchema, sized.filter { case (p, _) => keep(p) },
-        statsByAbs, hadoopOpts)
-    }
-    val manifestPlanning = spark.conf
-      .getOption("spark.graft.manifest.planning").forall(_ == "true")
-    val manifest: Option[Table with SupportsRead] =
-      if (!manifestPlanning) None
-      else ManifestFileIndex.tableFor(s"$tableName@fill", spark,
-        hadoopOpts, layout, schemaOverride = Some(physicalSchema),
-        fileSubset = Some(files.map(relByAbs)),
-        formatOverride = Some(fmt))
-    // format dispatch (round 16): converted Iceberg ORC layouts with
-    // identity-partition fills read through Spark's stock ORC table —
-    // the constant injection wraps the reader seam, format-blind.
-    // NO basePath: the manifest is the single source of truth for
-    // these columns — a basePath would make Spark infer partition
-    // columns from `col=value` directory names, double-serving the
-    // fill columns and CONFLICTING on layouts whose snapshots nest at
-    // different depths (imported tree + appended `data/sN/col=v`)
-    val table = manifest.getOrElse(fmt match {
-      case "orc" =>
-        org.apache.spark.sql.execution.datasources.v2.orc.OrcTable(
-          s"$tableName@fill", spark,
-          new CaseInsensitiveStringMap(hadoopOpts.asJava),
-          files, userSpecifiedSchema = Some(physicalSchema),
-          fallbackFileFormat = classOf[org.apache.spark.sql.execution
-            .datasources.orc.OrcFileFormat])
-      case _ =>
-        ParquetTable(s"$tableName@fill", spark,
-          new CaseInsensitiveStringMap(hadoopOpts.asJava),
-          files, userSpecifiedSchema = Some(physicalSchema),
-          fallbackFileFormat = classOf[ParquetFileFormat])
-    })
-    val groupStats = {
-      val keep = files.map(f =>
-        new org.apache.hadoop.fs.Path(f).toUri.getPath).toSet
-      statsByPath.filter { case (p, _) => keep(p) }
-    }
-    if (groupStats.isEmpty) table
-    else new StatsPrunedTable(table, groupStats, totalDataFiles = -1)
+    ReadRoute.groupTable(s"$tableName@fill", layout, hadoopOpts,
+      physicalSchema, files, fmt)
   }
 
   override def name(): String = tableName

@@ -15,8 +15,6 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionRead
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.connector.write.RowLevelOperationInfo
 import org.apache.spark.sql.execution.datasources.FilePartition
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, LongType, StructType}
@@ -386,33 +384,19 @@ private final class LineageScan(spark: SparkSession, label: String,
     * never build a stock scan — they decode through
     * [[AvroRead.openSlice]] directly (whole-file, in-order). */
   private lazy val stockScans: Seq[(String, Scan)] = {
-    // fill layouts pass NO basePath: Spark would infer partition
-    // columns from `col=value` directory names (and conflict across
-    // snapshot depths)
-    val opts = new CaseInsensitiveStringMap(
-      (if (layout.suppressBasePath) hadoopOpts
-       else hadoopOpts + ("basePath" -> layout.dataLocation)).asJava)
     // the table schema WIDENED with the materialized-lineage fields:
     // pruning drops columns outside the declared schema, and the stock
     // readers (and the avro decoder) serve NULL where a file lacks
-    // them (ordinary appends)
+    // them (ordinary appends). Fill layouts pass NO basePath
+    // ([[TableLayout.suppressBasePath]]).
     val widened = StructType(physicalTable.fields ++ matFields)
-    layout.absoluteDataFiles.getOrElse(Nil).zip(fileFormats)
+    layout.dataFiles.getOrElse(Nil).zip(fileFormats)
       .filterNot(_._2 == "avro")
       .groupBy(_._2).toSeq.sortBy(_._1)
       .map { case (fmt, pairs) =>
-        val files = pairs.map(_._1)
-        val table: Table with SupportsRead =
-          if (fmt == "orc")
-            org.apache.spark.sql.execution.datasources.v2.orc.OrcTable(
-              s"$label-lineage", spark, opts, files,
-              userSpecifiedSchema = Some(widened),
-              fallbackFileFormat = classOf[org.apache.spark.sql.execution
-                .datasources.orc.OrcFileFormat])
-          else ParquetTable(s"$label-lineage", spark, opts, files,
-            userSpecifiedSchema = Some(widened),
-            fallbackFileFormat = classOf[ParquetFileFormat])
-        val b = table.newScanBuilder(opts)
+        val b = ReadRoute.fileTable(s"$label-lineage", layout, hadoopOpts,
+          Some(widened), Some(pairs.map(_._1)), Some(fmt))
+          .newScanBuilder(new CaseInsensitiveStringMap(hadoopOpts.asJava))
         b.asInstanceOf[org.apache.spark.sql.connector.read
           .SupportsPushDownRequiredColumns].pruneColumns(dataSchema)
         (fmt, b.build()) // NO filters pushed: complete reads only

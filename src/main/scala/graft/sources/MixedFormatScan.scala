@@ -11,10 +11,6 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics}
-import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.orc.OrcTable
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -70,95 +66,32 @@ final class GraftMixedFormatTable(spark: SparkSession, tableName: String,
       .groupBy(_._2).toSeq.sortBy(_._1)
       .map { case (fmt, pairs) => (fmt, pairs.map(_._1)) }
 
-  private val groupTables: Seq[Table with SupportsRead] = {
-    val absOf: Map[String, String] = layout.dataFiles.getOrElse(Nil)
-      .zip(layout.absoluteDataFiles.getOrElse(Nil)).toMap
-    val manifestPlanning = spark.conf
-      .getOption("spark.graft.manifest.planning").forall(_ == "true")
-    val statsEnabled = spark.conf
-      .getOption("spark.graft.stats.pruning").forall(_ == "true")
-    // two key spellings: StatsPrunedTable compares by URI path, the
-    // avro builder by the absolute manifest path
-    val statsByUriPath: Map[String, String] =
-      if (!statsEnabled) Map.empty
-      else layout.absoluteDataFilesWithStats
-        .map(_.collect { case (p, s) if s.nonEmpty =>
-          new org.apache.hadoop.fs.Path(p).toUri.getPath -> s }.toMap)
-        .getOrElse(Map.empty)
-    val statsByAbs: Map[String, String] =
-      if (!statsEnabled) Map.empty
-      else layout.absoluteDataFilesWithStats
-        .map(_.collect { case (p, s) if s.nonEmpty => p -> s }.toMap)
-        .getOrElse(Map.empty)
+  /** Each format group's table over a group-restricted slice: the
+    * stats-pruned file table ([[ReadRoute.groupTable]]) when no deletes
+    * are live; with live deletes (the one-commit Flink upsert on a
+    * migrated ORC base) each group rides its OWN merge-on-read wrapper
+    * over a group-restricted layout — targets/tuple/seq gates only ever
+    * match within the group's files, and the layout keeps per-file
+    * FILLS in lockstep (retainDataFiles), which the MOR scans inject
+    * below their probes. The parquet/orc MOR wrapper needs the stock
+    * FileScanBuilder directly (correctness over the stats wrapper). */
+  private val groupTables: Seq[Table with SupportsRead] =
     groups.map { case (fmt, rels) =>
-      val abs = rels.map(absOf)
-      if (fmt == "avro") {
-        // live deletes (round 19): the avro group rides its OWN
-        // counting-read MOR scan over a group-restricted layout, like
-        // the parquet/orc groups below — targets/tuple/seq gates only
-        // ever match within the group's files
-        if (layout.deleteFiles.nonEmpty)
-          new GraftAvroMorTable(spark, s"$tableName@avro",
-            layout.retainDataFiles(rels.toSet)
-              .copy(dataFormat = fmt, dataFileFormats = None), hadoopOpts,
+      val name = s"$tableName@$fmt"
+      if (layout.deleteFiles.isEmpty)
+        ReadRoute.groupTable(name, layout, hadoopOpts, currentSchema, rels, fmt)
+      else {
+        val groupLayout = layout.retainDataFiles(rels.toSet)
+          .copy(dataFormat = fmt, dataFileFormats = None)
+        if (fmt == "avro")
+          new GraftAvroMorTable(spark, name, groupLayout, hadoopOpts,
             keyNameMap = keyNameMap)
-        else {
-          val sized = layout.absoluteDataFilesWithSizes.getOrElse(
-            throw new IllegalStateException(
-              s"mixed-format table $tableName has avro files but no " +
-                "complete file-size manifest"))
-          val keep = abs.toSet
-          new GraftAvroTable(spark, s"$tableName@avro", currentSchema,
-            sized.filter { case (p, _) => keep(p) },
-            statsByAbs.filter { case (p, _) => keep(p) }, hadoopOpts)
-        }
-      } else {
-        val manifest: Option[Table with SupportsRead] =
-          if (!manifestPlanning) None
-          else ManifestFileIndex.tableFor(s"$tableName@$fmt", spark,
-            hadoopOpts, layout, schemaOverride = Some(currentSchema),
-            fileSubset = Some(rels), formatOverride = Some(fmt))
-        val table = manifest.getOrElse {
-          val opts = new CaseInsensitiveStringMap(
-            (if (layout.suppressBasePath) hadoopOpts
-             else hadoopOpts + ("basePath" -> layout.dataLocation)).asJava)
-          if (fmt == "orc")
-            OrcTable(s"$tableName@$fmt", spark, opts, abs,
-              userSpecifiedSchema = Some(currentSchema),
-              fallbackFileFormat = classOf[OrcFileFormat])
-          else
-            ParquetTable(s"$tableName@$fmt", spark, opts, abs,
-              userSpecifiedSchema = Some(currentSchema),
-              fallbackFileFormat = classOf[ParquetFileFormat])
-        }
-        // live deletes (round 18 — the one-commit Flink upsert on a
-        // migrated ORC base): each parquet/orc group rides its OWN
-        // merge-on-read wrapper over a group-restricted layout — the
-        // same counting-read machinery a homogeneous table gets, so
-        // targets/tuple/seq gates only ever match within the group's
-        // files. The MOR wrapper needs the stock FileScanBuilder
-        // directly (correctness over the stats wrapper, exactly like
-        // the homogeneous MOR route); the group-restricted layout keeps
-        // per-file FILLS in lockstep (retainDataFiles), which the MOR
-        // scan injects below its probes — the partitioned-hive-import
-        // base of a mixed delete-live layout (round 20).
-        if (layout.deleteFiles.nonEmpty) {
-          val groupLayout = layout.retainDataFiles(rels.toSet)
-            .copy(dataFormat = fmt, dataFileFormats = None)
-          new GraftMorTable(table, groupLayout, hadoopOpts,
-            keyNameMap = keyNameMap)
-        } else {
-          val groupStats = {
-            val keep = abs.map(f =>
-              new org.apache.hadoop.fs.Path(f).toUri.getPath).toSet
-            statsByUriPath.filter { case (p, _) => keep(p) }
-          }
-          if (groupStats.isEmpty) table
-          else new StatsPrunedTable(table, groupStats, totalDataFiles = -1)
-        }
+        else new GraftMorTable(
+          ReadRoute.fileTable(name, layout, hadoopOpts, Some(currentSchema),
+            Some(rels), Some(fmt)),
+          groupLayout, hadoopOpts, keyNameMap = keyNameMap)
       }
     }
-  }
 
   override def name(): String = tableName
   override def schema(): StructType = currentSchema

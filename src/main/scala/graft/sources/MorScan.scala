@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
@@ -1405,114 +1405,4 @@ private final class MorRowReader(inner: PartitionReader[InternalRow],
 
   override def get(): InternalRow = current
   override def close(): Unit = inner.close()
-}
-
-/** The DataFrame face of a delete-live ORC layout (round 16): the SAME
-  * DSv2 merge-on-read machinery the SQL face plans — whole-file counting
-  * reads, broadcast equality probes, per-task positional/DV decode —
-  * handed to `spark.read.format(...)` through [[MorTableProvider]]'s
-  * one-shot registry (the [[AvroRead.dataFrame]] bridge pattern).
-  * Parquet layouts keep CatalogIO's join-based DataFrame path: it
-  * captures row addresses via `_metadata.row_index`, which Spark's file
-  * sources expose for parquet ONLY — this route exists precisely because
-  * ORC has no such column. */
-object MorRead {
-  def dataFrame(spark: SparkSession, layout: TableLayout,
-      options: Map[String, String]): DataFrame = {
-    val files = layout.absoluteDataFiles.getOrElse(
-      throw new IllegalStateException(
-        s"merge-on-read DataFrame read of a manifest-less layout at " +
-          layout.dataLocation))
-    val name = s"graft-mor-df(${layout.dataFormat}, ${files.size} files)"
-    // manifest-planned when sizes are complete (zero listing calls),
-    // else Spark's listing-backed table for the layout's format
-    val base: Table with SupportsRead =
-      ManifestFileIndex.tableFor(name, spark, options, layout).getOrElse {
-        val opts = new CaseInsensitiveStringMap(
-          (if (layout.suppressBasePath) options
-           else options + ("basePath" -> layout.dataLocation)).asJava)
-        val schema = layout.schemaDdl
-          .map(org.apache.spark.sql.types.StructType.fromDDL)
-        layout.dataFormat match {
-          case "orc" => org.apache.spark.sql.execution.datasources.v2.orc
-            .OrcTable(name, spark, opts, files, schema,
-              classOf[org.apache.spark.sql.execution.datasources.orc.OrcFileFormat])
-          case other => throw new IllegalStateException(
-            s"MorRead.dataFrame serves non-parquet counting-read layouts; " +
-              s"got $other for ${layout.dataLocation}")
-        }
-      }
-    MorTableProvider.loadDataFrame(spark,
-      new GraftMorTable(base, layout, options))
-  }
-}
-
-/** DSv2 TableProvider serving a driver-side prepared table (merge-on-
-  * read, epoch, …) by one-shot registry key — see [[MorRead.dataFrame]]
-  * and [[EpochRead.dataFrame]]. */
-final class MorTableProvider
-  extends org.apache.spark.sql.connector.catalog.TableProvider {
-  import MorTableProvider._
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    lookup(options).schema()
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    take(new CaseInsensitiveStringMap(properties))
-
-  override def supportsExternalMetadata(): Boolean = false
-}
-
-object MorTableProvider {
-  /** Option key carrying the registry handle. */
-  val PlanKey = "graft.mor.plan"
-
-  private val registry =
-    new java.util.concurrent.ConcurrentHashMap[String, Table with SupportsRead]()
-
-  private[sources] def register(t: Table with SupportsRead): String = {
-    val k = java.util.UUID.randomUUID().toString
-    registry.put(k, t)
-    k
-  }
-
-  /** Failure-path cleanup (idempotent — `load()` may already have
-    * consumed the key before failing). */
-  private[sources] def deregister(key: String): Unit = registry.remove(key)
-
-  private[sources] def registrySize: Int = registry.size()
-
-  /** One `load()` over a driver-side prepared table, registry key
-    * cleaned up on the failure path so a failed load() cannot strand
-    * the table (layout + file list + session ref) for the driver's
-    * life. */
-  private[graft] def loadDataFrame(spark: SparkSession,
-      t: Table with SupportsRead): DataFrame = {
-    val key = register(t)
-    try spark.read.format(classOf[MorTableProvider].getName)
-      .option(PlanKey, key).load()
-    catch {
-      case e: Throwable =>
-        deregister(key)
-        throw e
-    }
-  }
-
-  private def lookup(options: CaseInsensitiveStringMap): Table with SupportsRead = {
-    val k = options.get(PlanKey)
-    val t = if (k == null) null else registry.get(k)
-    if (t == null) throw new IllegalStateException(
-      "MorTableProvider is driver-internal: construct reads through " +
-        "graft.sources.MorRead.dataFrame / EpochRead.dataFrame, not " +
-        "spark.read.format(...)")
-    t
-  }
-
-  /** `getTable` consumes the key (one `load()` per registration). */
-  private def take(options: CaseInsensitiveStringMap): Table with SupportsRead = {
-    val t = lookup(options)
-    registry.remove(options.get(PlanKey))
-    t
-  }
 }

@@ -11,8 +11,6 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.types.{BinaryType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -77,16 +75,8 @@ final class GraftUuidTable(spark: SparkSession, tableName: String,
         new GraftEpochTable(spark, tableName, sub, hadoopOpts)
       else new GraftEpochMorTable(spark, tableName, sub, hadoopOpts)
     } else {
-    val base = ManifestFileIndex.tableFor(tableName, spark, hadoopOpts,
-      layout, schemaOverride = Some(physical)).getOrElse {
-      val opts = new CaseInsensitiveStringMap(
-        (if (layout.suppressBasePath) hadoopOpts
-         else hadoopOpts + ("basePath" -> layout.dataLocation)).asJava)
-      ParquetTable(tableName, spark, opts,
-        layout.absoluteDataFiles.getOrElse(Seq(layout.dataLocation)),
-        userSpecifiedSchema = Some(physical),
-        fallbackFileFormat = classOf[ParquetFileFormat])
-    }
+    val base = ReadRoute.fileTable(tableName, layout, hadoopOpts,
+      schema = Some(physical))
     // uuid + live DELETES (late round 19): the merge-on-read wrapper
     // plans INSIDE the conversion seam, over the PHYSICAL (binary)
     // schema — equality probes and position counting run in binary

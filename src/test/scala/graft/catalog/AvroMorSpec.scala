@@ -57,11 +57,9 @@ class AvroMorSpec extends AnyFunSuite {
       // the target file's first two rows, independent of the engine's
       // MOR machinery: one sync slice through the raw avro face
       // preserves file order
-      val schema = org.apache.spark.sql.types.StructType
-        .fromDDL(lay1.schemaDdl.get)
-      val sized = lay1.absoluteDataFilesWithSizes.get
-        .filter(_._1 == target)
-      graft.sources.AvroRead.dataFrame(spark, schema, sized, Map.empty)
+      val raw = graft.sources.ReadRoute.fileTable("avro-target", lay1,
+        Map.empty, files = Some(lay1.dataFiles.get.take(1)))
+      org.apache.spark.sql.GraftFrames.ofTable(spark, raw, Map.empty)
         .collect().take(2)
         .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSeq
     }

@@ -253,7 +253,7 @@ class IcebergFormatSpec extends AnyFunSuite {
     val deleted = posDeletedIds ++ eqIds
     val expected = sampleDf.filter(!col("id").isin(deleted.toSeq: _*))
     // DataFrame face — ORC has no `_metadata.row_index`, so this routes
-    // through the DSv2 counting-read machinery (MorRead), not the
+    // through the DSv2 counting-read machinery (ReadRoute), not the
     // parquet join path
     val df = CatalogIO.scanMetadataLocation(spark, metaLoc)
     assert(df.count() == 300 - deleted.size)
@@ -1305,7 +1305,6 @@ class IcebergFormatSpec extends AnyFunSuite {
 
   test("v2 merge-on-read: live positional AND equality deletes scan to exact logical content") {
     import org.apache.spark.sql.functions.col
-    import spark.implicits._
     val dir = s"${Files.createTempDirectory("graft-iceberg").toString}/t4"
     // deterministic row→file→position mapping: range-partitioned by id,
     // sorted within each file
@@ -1648,7 +1647,7 @@ class IcebergFormatSpec extends AnyFunSuite {
     * parquet field ids attached (what a real Iceberg writer records). */
   private def writeWithFieldIds(df: org.apache.spark.sql.DataFrame,
       ids: Seq[Int], target: Path): Unit = {
-    import org.apache.spark.sql.types.{Metadata, MetadataBuilder, StructType}
+    import org.apache.spark.sql.types.{MetadataBuilder, StructType}
     val annotated = StructType(df.schema.fields.zip(ids).map { case (f, id) =>
       f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
         .putLong("parquet.field.id", id.toLong).build())
@@ -1829,7 +1828,7 @@ class IcebergFormatSpec extends AnyFunSuite {
     assert(layout.renameOps.nonEmpty, "expected synthesized rename ops")
     assert(layout.dataFileSeqs.exists(_.distinct.size == 2),
       "expected two file epochs")
-    // DataFrame face: the EpochRead bridge routes the avro decoder per
+    // DataFrame face: the routed epoch table runs the avro decoder per
     // epoch — the old file's column serves under the new name (a plain
     // avro read would NULL-fill it)
     val expected = (1L to 80L).map(i => s"$i|${i * 10}").sorted
@@ -1997,7 +1996,6 @@ class IcebergFormatSpec extends AnyFunSuite {
   }
 
   test("a renamed ORC table reads hash-identically: field ids from ORC schema attributes") {
-    import spark.implicits._
     val conf = spark.sessionState.newHadoopConf()
     val dir = new Path(s"${Files.createTempDirectory("graft-iceberg").toString}/oren")
     val fs = dir.getFileSystem(conf)
@@ -2057,7 +2055,7 @@ class IcebergFormatSpec extends AnyFunSuite {
     assert(layout.renameOps.nonEmpty, "expected synthesized rename ops")
     assert(layout.dataFileSeqs.exists(_.distinct.size == 2),
       "expected two file epochs")
-    // DataFrame face: the EpochRead bridge serves the SAME epoch
+    // DataFrame face: the routed epoch table is the SAME epoch
     // machinery the SQL face plans (values, not just counts)
     val expected = (1L to 80L).map(i => s"$i|${i * 10}").sorted
     val df = CatalogIO.scanMetadataLocation(spark, metaP.toString)
@@ -2816,7 +2814,6 @@ class IcebergFormatSpec extends AnyFunSuite {
 
   test("v3 VARIANT columns read through both faces (Spark's parquet " +
     "variant decode); v2-declared and non-parquet variant refuse") {
-    import spark.implicits._
     val conf = spark.sessionState.newHadoopConf()
     val dir = new Path(s"${Files.createTempDirectory("graft-iceberg").toString}/var")
     val fs = dir.getFileSystem(conf)
@@ -2927,8 +2924,6 @@ class IcebergFormatSpec extends AnyFunSuite {
   }
 
   test("v3 guards: puffin at v2 refuses, nested initial-default refuses") {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
     // puffin delete file inside a v2 table: spec-violating metadata
     val dir = s"${Files.createTempDirectory("graft-iceberg").toString}/t6"
     val metaLoc = IcebergExport.writeTable(spark, sampleDf.coalesce(1), dir)
@@ -3475,7 +3470,6 @@ class IcebergFormatSpec extends AnyFunSuite {
       "and row paths; post-addition appends serve their own values; " +
       "null structs stay null; the dotted fill survives adoption") {
     graft.sources.TempCatalog.withTempHandles(spark, "graft-ice-ndef") { (cat, hc) =>
-      import spark.implicits._
       val dir = s"${Files.createTempDirectory("graft-iceberg").toString}/tnd"
       val base = spark.sql(
         """SELECT id,

@@ -189,4 +189,29 @@ class MigratorSpec extends AnyFunSuite {
     assert(TableRef.parse("a.b.c.t").toString == "a.b.c.t")
     assert(Namespace.parse("a.b.c").prefixes.map(_.toString) == Seq("a", "a.b", "a.b.c"))
   }
+
+  test("a target client that cannot be built inside the task fails soft: " +
+      "every table lands in failedToRegister and the call returns") {
+    val srcCfg = memCfg()
+    seedCanonical(srcCfg)
+    // the custom seam loads the class on the executor, so the build
+    // throws inside the task (registerTables never builds the target
+    // outside it)
+    val tgtCfg = CatalogConfig("custom", s"broken-${uid()}",
+      Map("impl" -> "graft.catalog.NoSuchCatalogImpl"))
+    val m = new CatalogMigrator(srcCfg, tgtCfg,
+      deleteEntriesFromSourceCatalog = true)
+    val ids = m.getMatchingTableIdentifiers(None)
+    assert(ids.size == 4)
+    m.registerTables(spark, ids)
+    val r = m.result()
+    assert(r.registeredTableIdentifiers.isEmpty)
+    assert(r.failedToRegisterTableIdentifiers.map(_.toString).toSet ==
+      ids.map(_.toString).toSet)
+    assert(r.failedToDeleteTableIdentifiers.isEmpty)
+    // nothing registered, so nothing was dropped at the source
+    val src = CatalogFactory.build(srcCfg)
+    assert(ids.forall(src.tableExists))
+    m.close()
+  }
 }

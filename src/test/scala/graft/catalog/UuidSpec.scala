@@ -23,111 +23,14 @@ class UuidSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private def conf = spark.sessionState.newHadoopConf()
 
-  private def uuidOf(i: Int): java.util.UUID =
-    java.util.UUID.nameUUIDFromBytes(Array(i.toByte))
+  private def uuidOf(i: Int): java.util.UUID = UuidSpec.uuidOf(i)
 
-  /** One parquet data file with (u uuid-fixed16, k int64), k in
-    * [1, n], u = nameUUID(k); u is NULL when k % 5 == 0. */
-  private def writeUuidParquet(path: Path, n: Int): Unit = {
-    val schema = new MessageType("t",
-      Types.primitive(PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY,
-          Type.Repetition.OPTIONAL)
-        .length(16).as(LogicalTypeAnnotation.uuidType()).named("u"),
-      Types.primitive(PrimitiveTypeName.INT64, Type.Repetition.REQUIRED)
-        .named("k"))
-    val c = new org.apache.hadoop.conf.Configuration(conf)
-    org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(schema, c)
-    val w = ExampleParquetWriter.builder(path).withConf(c)
-      .withType(schema).build()
-    val gf = new SimpleGroupFactory(schema)
-    (1 to n).foreach { i =>
-      val g = gf.newGroup()
-      if (i % 5 != 0) {
-        val uuid = uuidOf(i)
-        val bb = java.nio.ByteBuffer.allocate(16)
-        bb.putLong(uuid.getMostSignificantBits)
-        bb.putLong(uuid.getLeastSignificantBits)
-        g.add("u", org.apache.parquet.io.api.Binary
-          .fromConstantByteArray(bb.array()))
-      }
-      g.add("k", i.toLong)
-      w.write(g)
-    }
-    w.close()
-  }
+  private def writeUuidParquet(path: Path, n: Int): Unit =
+    UuidSpec.writeUuidParquet(conf, path, n)
 
   private def writeTable(dir: String, uuidFieldJson: String,
-      formatVersion: Int = 2, baseSeq: Long = 0L): String = {
-    val fs = new Path(dir).getFileSystem(conf)
-    fs.mkdirs(new Path(dir, "data"))
-    fs.mkdirs(new Path(dir, "metadata"))
-    writeUuidParquet(new Path(dir, "data/f.parquet"), 20)
-    val mSchema = new org.apache.avro.Schema.Parser().parse(
-      """{"type":"record","name":"manifest_entry","fields":[
-        |{"name":"status","type":"int"},
-        |{"name":"snapshot_id","type":"long"},
-        |{"name":"data_file","type":{"type":"record","name":"r2","fields":[
-        |  {"name":"file_path","type":"string"},
-        |  {"name":"file_format","type":"string"},
-        |  {"name":"record_count","type":"long"},
-        |  {"name":"file_size_in_bytes","type":"long"}]}}]}""".stripMargin)
-    val m = new Path(dir, "metadata/m.avro")
-    val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](mSchema))
-    w.create(mSchema, fs.create(m, true))
-    val abs = new Path(dir, "data/f.parquet")
-    val d = new GenericData.Record(mSchema.getField("data_file").schema())
-    d.put("file_path", fs.makeQualified(abs).toString)
-    d.put("file_format", "PARQUET")
-    d.put("record_count", 20L)
-    d.put("file_size_in_bytes", fs.getFileStatus(abs).getLen)
-    val r = new GenericData.Record(mSchema)
-    r.put("status", 1); r.put("snapshot_id", 7L); r.put("data_file", d)
-    w.append(r); w.close()
-    // a REAL v2 manifest LIST (round 19 — the write verbs carry prior
-    // manifests by list-entry reference, which the early inline
-    // "manifests" form cannot express)
-    val listSchema = new org.apache.avro.Schema.Parser().parse(
-      """{"type":"record","name":"manifest_file","fields":[
-        |{"name":"manifest_path","type":"string"},
-        |{"name":"manifest_length","type":"long"},
-        |{"name":"content","type":"int"},
-        |{"name":"sequence_number","type":"long"},
-        |{"name":"min_sequence_number","type":"long"},
-        |{"name":"added_snapshot_id","type":"long"}]}""".stripMargin)
-    val ml = new Path(dir, "metadata/ml.avro")
-    val lw = new DataFileWriter(new GenericDatumWriter[GenericRecord](listSchema))
-    lw.setMeta("snapshot-id", "7")
-    lw.create(listSchema, fs.create(ml, true))
-    val le = new GenericData.Record(listSchema)
-    le.put("manifest_path", fs.makeQualified(m).toString)
-    le.put("manifest_length", fs.getFileStatus(m).getLen)
-    le.put("content", 0); le.put("sequence_number", baseSeq)
-    le.put("min_sequence_number", baseSeq); le.put("added_snapshot_id", 7L)
-    lw.append(le); lw.close()
-    val loc = fs.makeQualified(new Path(dir)).toString
-    val p = new Path(dir, "metadata/v1.metadata.json")
-    val out = fs.create(p, true)
-    // v3 fixtures (round 20 — uuid + row lineage): the snapshot's
-    // first-row-id anchors the manifest-list inheritance; positions
-    // were written in k order, so _row_id == k - 1
-    val v3Fields =
-      if (formatVersion >= 3) """ "next-row-id": 20,""" else ""
-    val v3Snap = if (formatVersion >= 3) """ "first-row-id": 0,""" else ""
-    try out.write(
-      s"""{"format-version": $formatVersion, "location": "$loc",
-         |"last-sequence-number": $baseSeq,$v3Fields
-         |"schemas": [{"type": "struct", "schema-id": 0, "fields": [
-         |  $uuidFieldJson,
-         |  {"id": 2, "name": "k", "required": true, "type": "long"}]}],
-         |"current-schema-id": 0,
-         |"current-snapshot-id": 7,
-         |"snapshots": [{"snapshot-id": 7, "schema-id": 0,
-         |  "sequence-number": $baseSeq,$v3Snap
-         |  "manifest-list": "${fs.makeQualified(ml)}"}]}""".stripMargin
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    p.toString
-  }
+      formatVersion: Int = 2, baseSeq: Long = 0L): String =
+    UuidSpec.writeTable(conf, dir, uuidFieldJson, formatVersion, baseSeq)
 
   test("uuid columns serve as canonical strings on both faces; " +
       "uuid filters answer") {
@@ -176,7 +79,6 @@ class UuidSpec extends AnyFunSuite {
       "conversion; SQL INSERT writes the 16-byte form; eq-MOR deletes " +
       "keyed on the uuid column probe in binary space; compaction " +
       "materializes the strings and drops the conversion") {
-    import org.apache.spark.sql.functions.col
     val dir = s"${Files.createTempDirectory("graft-uuid-a").toString}/t"
     val metaP = writeTable(dir,
       """{"id": 1, "name": "u", "required": false, "type": "uuid"}""")
@@ -506,7 +408,7 @@ class UuidSpec extends AnyFunSuite {
         .map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._2)
       assert(got == expect, s"$face rows")
     }
-    // DataFrame face (the registry bridge — binary probe space)
+    // DataFrame face (the routed uuid table — binary probe space)
     check(CatalogIO.scanMetadataLocation(spark, meta2), "DataFrame")
     graft.sources.TempCatalog.withTempHandles(spark, "graft-uuid-d") {
       (cat, hc) =>
@@ -887,7 +789,6 @@ class UuidSpec extends AnyFunSuite {
   test("uuid + RENAMES compose (late round 20): ALTER RENAME on the " +
       "data column AND on the uuid column itself; deletes keyed on the " +
       "renamed uuid column; compaction clears everything") {
-    import org.apache.spark.sql.functions.col
     val dir = s"${Files.createTempDirectory("graft-uuid-rn").toString}/t"
     val metaP = writeTable(dir,
       """{"id": 1, "name": "u", "required": false, "type": "uuid"}""")
@@ -958,5 +859,119 @@ class UuidSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("s.u") &&
       e.getMessage.contains("top-level"), e.getMessage)
+  }
+}
+
+object UuidSpec {
+
+  def uuidOf(i: Int): java.util.UUID =
+    java.util.UUID.nameUUIDFromBytes(Array(i.toByte))
+
+  /** One parquet data file with (u uuid-fixed16, k int64), k in
+    * [1, n], u = nameUUID(k); u is NULL when k % 5 == 0. */
+  def writeUuidParquet(conf: org.apache.hadoop.conf.Configuration,
+      path: Path, n: Int): Unit = {
+    val schema = new MessageType("t",
+      Types.primitive(PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY,
+          Type.Repetition.OPTIONAL)
+        .length(16).as(LogicalTypeAnnotation.uuidType()).named("u"),
+      Types.primitive(PrimitiveTypeName.INT64, Type.Repetition.REQUIRED)
+        .named("k"))
+    val c = new org.apache.hadoop.conf.Configuration(conf)
+    org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(schema, c)
+    val w = ExampleParquetWriter.builder(path).withConf(c)
+      .withType(schema).build()
+    val gf = new SimpleGroupFactory(schema)
+    (1 to n).foreach { i =>
+      val g = gf.newGroup()
+      if (i % 5 != 0) {
+        val uuid = uuidOf(i)
+        val bb = java.nio.ByteBuffer.allocate(16)
+        bb.putLong(uuid.getMostSignificantBits)
+        bb.putLong(uuid.getLeastSignificantBits)
+        g.add("u", org.apache.parquet.io.api.Binary
+          .fromConstantByteArray(bb.array()))
+      }
+      g.add("k", i.toLong)
+      w.write(g)
+    }
+    w.close()
+  }
+
+  /** A hand-written Iceberg table (one parquet file, `u` uuid + `k`
+    * long, 20 rows) exactly as Iceberg's writers lay it out; returns
+    * its metadata location. */
+  def writeTable(conf: org.apache.hadoop.conf.Configuration, dir: String,
+      uuidFieldJson: String, formatVersion: Int = 2,
+      baseSeq: Long = 0L): String = {
+    val fs = new Path(dir).getFileSystem(conf)
+    fs.mkdirs(new Path(dir, "data"))
+    fs.mkdirs(new Path(dir, "metadata"))
+    writeUuidParquet(conf, new Path(dir, "data/f.parquet"), 20)
+    val mSchema = new org.apache.avro.Schema.Parser().parse(
+      """{"type":"record","name":"manifest_entry","fields":[
+        |{"name":"status","type":"int"},
+        |{"name":"snapshot_id","type":"long"},
+        |{"name":"data_file","type":{"type":"record","name":"r2","fields":[
+        |  {"name":"file_path","type":"string"},
+        |  {"name":"file_format","type":"string"},
+        |  {"name":"record_count","type":"long"},
+        |  {"name":"file_size_in_bytes","type":"long"}]}}]}""".stripMargin)
+    val m = new Path(dir, "metadata/m.avro")
+    val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](mSchema))
+    w.create(mSchema, fs.create(m, true))
+    val abs = new Path(dir, "data/f.parquet")
+    val d = new GenericData.Record(mSchema.getField("data_file").schema())
+    d.put("file_path", fs.makeQualified(abs).toString)
+    d.put("file_format", "PARQUET")
+    d.put("record_count", 20L)
+    d.put("file_size_in_bytes", fs.getFileStatus(abs).getLen)
+    val r = new GenericData.Record(mSchema)
+    r.put("status", 1); r.put("snapshot_id", 7L); r.put("data_file", d)
+    w.append(r); w.close()
+    // a REAL v2 manifest LIST (round 19 — the write verbs carry prior
+    // manifests by list-entry reference, which the early inline
+    // "manifests" form cannot express)
+    val listSchema = new org.apache.avro.Schema.Parser().parse(
+      """{"type":"record","name":"manifest_file","fields":[
+        |{"name":"manifest_path","type":"string"},
+        |{"name":"manifest_length","type":"long"},
+        |{"name":"content","type":"int"},
+        |{"name":"sequence_number","type":"long"},
+        |{"name":"min_sequence_number","type":"long"},
+        |{"name":"added_snapshot_id","type":"long"}]}""".stripMargin)
+    val ml = new Path(dir, "metadata/ml.avro")
+    val lw = new DataFileWriter(new GenericDatumWriter[GenericRecord](listSchema))
+    lw.setMeta("snapshot-id", "7")
+    lw.create(listSchema, fs.create(ml, true))
+    val le = new GenericData.Record(listSchema)
+    le.put("manifest_path", fs.makeQualified(m).toString)
+    le.put("manifest_length", fs.getFileStatus(m).getLen)
+    le.put("content", 0); le.put("sequence_number", baseSeq)
+    le.put("min_sequence_number", baseSeq); le.put("added_snapshot_id", 7L)
+    lw.append(le); lw.close()
+    val loc = fs.makeQualified(new Path(dir)).toString
+    val p = new Path(dir, "metadata/v1.metadata.json")
+    val out = fs.create(p, true)
+    // v3 fixtures (round 20 — uuid + row lineage): the snapshot's
+    // first-row-id anchors the manifest-list inheritance; positions
+    // were written in k order, so _row_id == k - 1
+    val v3Fields =
+      if (formatVersion >= 3) """ "next-row-id": 20,""" else ""
+    val v3Snap = if (formatVersion >= 3) """ "first-row-id": 0,""" else ""
+    try out.write(
+      s"""{"format-version": $formatVersion, "location": "$loc",
+         |"last-sequence-number": $baseSeq,$v3Fields
+         |"schemas": [{"type": "struct", "schema-id": 0, "fields": [
+         |  $uuidFieldJson,
+         |  {"id": 2, "name": "k", "required": true, "type": "long"}]}],
+         |"current-schema-id": 0,
+         |"current-snapshot-id": 7,
+         |"snapshots": [{"snapshot-id": 7, "schema-id": 0,
+         |  "sequence-number": $baseSeq,$v3Snap
+         |  "manifest-list": "${fs.makeQualified(ml)}"}]}""".stripMargin
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    p.toString
   }
 }

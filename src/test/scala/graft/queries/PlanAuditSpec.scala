@@ -292,4 +292,38 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(!p.contains("CartesianProduct"), s"$q:\n$p")
     }
   }
+
+  test("d05: a round-robin exchange of at least the core count sits " +
+      "between the bucket aggregation and the pair explode") {
+    import org.apache.spark.sql.catalyst.expressions.PosExplode
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val plan = SparkEntry.queries("d05_dedup_embed_lsh")(spark, dir)
+      .queryExecution.sparkPlan
+    val explode = plan.collectFirst {
+      case g: GenerateExec if g.generator.isInstanceOf[PosExplode] => g
+    }.getOrElse(fail(s"no posexplode in the d05 plan:\n$plan"))
+    // the first exchange below the explode, through narrow operators only
+    def firstExchange(p: SparkPlan): Option[ShuffleExchangeExec] = p match {
+      case e: ShuffleExchangeExec => Some(e)
+      case _: BaseAggregateExec => None
+      case other if other.children.size == 1 => firstExchange(other.children.head)
+      case _ => None
+    }
+    val pin = firstExchange(explode.child).getOrElse(fail(
+      s"no exchange between the pair explode and the bucket aggregation:\n$plan"))
+    val cores = spark.sparkContext.defaultParallelism
+    pin.outputPartitioning match {
+      case RoundRobinPartitioning(n) =>
+        assert(n >= cores, s"the pin must not narrow below $cores cores: $n")
+      case other => fail(s"expected a round-robin pin, got $other:\n$plan")
+    }
+    // and the bucket aggregation (the sorted collect_list) feeds it
+    assert(pin.child.collectFirst { case a: BaseAggregateExec
+        if a.aggregateExpressions.exists(
+          _.aggregateFunction.prettyName == "collect_list") => a }.isDefined,
+      s"the pin must sit above the bucket aggregation:\n$plan")
+  }
 }
