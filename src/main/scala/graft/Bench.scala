@@ -174,14 +174,7 @@ object Bench {
       System.err.println(
         s"[bench] WARNING: load average $loadBefore still above threshold " +
           s"after ${waitedSec}s; timings on this run will overstate costs")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val tmp = Files.createTempDirectory("graft_bench").toString
     // Warm up codegen/JIT, the parquet footer cache, and the write path so

@@ -22,14 +22,7 @@ object ScaleSmoke {
     val src = "/root/testdata/sf0.1"
     val out = s"/tmp/graft_scale_x$replicas"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def replicate(name: String)(
@@ -395,7 +388,6 @@ object ScaleSmoke {
       .select(col("l_orderkey").as("k"), col("l_quantity").as("qty"))
     val meta0 = IcebergExport.writeTable(spark,
       src.repartitionByRange(16, col("k")), s"$dir/store")
-    import spark.implicits._
     val meta1 = IcebergExport.appendDeletes(spark, meta0,
       equality = Some(src.filter(col("k") % 1000 === 0)
         .select(col("k")).distinct()))
@@ -626,7 +618,7 @@ object ScaleSmoke {
         f"${(System.nanoTime() - f0) / 1e9}%.2f s (${full(0).getLong(1)} rows)")
       graft.sources.StatsPruning.lastPlanned = None
       val p0 = System.nanoTime()
-      val n = spark.sql(
+      spark.sql(
         s"SELECT SUM(qty) FROM $cat.db.li WHERE k BETWEEN 500000 AND 520000")
         .collect()
       val (skipped, total) = graft.sources.StatsPruning.lastPlanned
@@ -1284,7 +1276,7 @@ object ScaleSmoke {
     * commit). */
   private def renameScale(spark: SparkSession, out: String, replicas: Int): Unit = {
     import graft.catalog.{CatalogIO, HadoopFsCatalog, Namespace, TableRef}
-    import org.apache.spark.sql.functions.{col, sum}
+    import org.apache.spark.sql.functions.col
     val dir = s"/tmp/graft_rename_x$replicas"
     graft.sources.TempCatalog.deleteRecursively(dir)
     val src = spark.read.parquet(s"$out/lineitem.parquet")

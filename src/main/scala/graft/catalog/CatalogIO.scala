@@ -1788,7 +1788,7 @@ object CatalogIO {
     // epoch, current physical names), and the scans serve the
     // composition through one MOR wrapper per rename epoch with the
     // probe keys translated to each epoch's physical spellings
-    // (graft.sources.GraftEpochMorTable). Positional MOR writes keep
+    // (graft.sources.GraftEpochTable). Positional MOR writes keep
     // refusing under renames (commitPositionalMergeOnRead).
     val priorFiles = prior.dataFiles.getOrElse(throw new UnsupportedOperationException(
       s"Table $ref v${n - 1} predates file manifests (whole-directory snapshot); " +
@@ -1987,8 +1987,7 @@ object CatalogIO {
     try {
       val count = typed.count()
       if (count == 0) return cat.metadataLocationForVersion(ref, n - 1)
-      val maxTuples = spark.conf.getOption("spark.graft.mor.maxDeleteTuples")
-        .map(_.toLong).getOrElse(4000000L)
+      val maxTuples = graft.sources.ReadRoute.maxDeleteTuples(spark)
       if (count > maxTuples)
         throw new IllegalStateException(
           s"positional delete on $ref addresses $count rows, past " +
@@ -3283,19 +3282,6 @@ object CatalogIO {
           .cast(org.apache.spark.sql.types.BinaryType)))
   }
 
-  /** Anti-join `data` against each delete file's key tuples — the
-    * DataFrame face of merge-on-read. The delete file's parquet schema
-    * IS its equality column set; files sharing a column set are unioned
-    * and applied as ONE anti join (null-safe per column, so a deleted
-    * NULL key deletes NULL-keyed rows — the tuples came from
-    * rows/conditions where that is the meaning).
-    *
-    * The broadcast hint is applied only while the tuple count (footer
-    * counts, no data read) stays under `spark.graft.mor.maxDeleteTuples`
-    * — the same threshold that makes the DSv2 scan REFUSE. Past it this
-    * face falls back to a shuffled anti join instead of refusing,
-    * because it is compaction's own read path: the escape hatch the
-    * refusal message points at must itself work at any delete size. */
   /** A file's on-disk format, resolved from its MAGIC bytes (parquet
     * files open with `PAR1`, ORC with `ORC`) and cached JVM-wide: read
     * sites often receive bare paths (task-side partitions, layout path
@@ -3372,6 +3358,19 @@ object CatalogIO {
     }.reduce(_ unionByName _)
   }
 
+  /** Anti-join `data` against each delete file's key tuples — the
+    * DataFrame face of merge-on-read. The delete file's parquet schema
+    * IS its equality column set; files sharing a column set are unioned
+    * and applied as ONE anti join (null-safe per column, so a deleted
+    * NULL key deletes NULL-keyed rows — the tuples came from
+    * rows/conditions where that is the meaning).
+    *
+    * The broadcast hint is applied only while the tuple count (footer
+    * counts, no data read) stays under `spark.graft.mor.maxDeleteTuples`
+    * — the same threshold that makes the DSv2 scan REFUSE. Past it this
+    * face falls back to a shuffled anti join instead of refusing,
+    * because it is compaction's own read path: the escape hatch the
+    * refusal message points at must itself work at any delete size. */
   private[graft] def applyEqualityDeletes(spark: SparkSession,
       data: DataFrame, deletePaths: Seq[String],
       options: Map[String, String]): DataFrame = {
@@ -3388,8 +3387,7 @@ object CatalogIO {
     val bySchema = deletePaths
       .groupBy(p => footer(p)._1)
       .toSeq.sortBy(_._1.mkString(","))
-    val maxBroadcast = spark.conf.getOption("spark.graft.mor.maxDeleteTuples")
-      .map(_.toLong).getOrElse(4000000L)
+    val maxBroadcast = graft.sources.ReadRoute.maxDeleteTuples(spark)
     val tupleCount = deletePaths.distinct.map(p => footer(p)._2).sum
     bySchema.foldLeft(data) { case (acc, (cols, paths)) =>
       val del = readDeleteFiles(spark, options, paths, conf)
@@ -3514,10 +3512,6 @@ object CatalogIO {
     }.reduce(_ unionByName _)
   }
 
-  /** Segment-relative form of an absolute data-file path column,
-    * matching every absolute spelling the readers can produce for the
-    * segment (qualified, raw, URI). A path matching NO prefix raises at
-    * execution — a silent mismatch here would resurrect deleted rows. */
   /** Every absolute spelling a reader can produce for files under
     * `dataLocation` (qualified, raw, URI), each with a trailing slash —
     * ONE definition of the path-spelling contract, shared by the
@@ -3572,6 +3566,10 @@ object CatalogIO {
     (canon +: variants).distinct
   }
 
+  /** Segment-relative form of an absolute data-file path column,
+    * matching every absolute spelling the readers can produce for the
+    * segment (qualified, raw, URI). A path matching NO prefix raises at
+    * execution — a silent mismatch here would resurrect deleted rows. */
   private[graft] def relativizeFileColumn(
       fileCol: org.apache.spark.sql.Column, dataLocation: String,
       conf: Configuration,
@@ -3602,14 +3600,6 @@ object CatalogIO {
     }
   }
 
-  /** Anti-join `data` (which must carry materialized `__graft_file` /
-    * `__graft_pos` address columns — see [[scanLayoutWithOptions]])
-    * against the positional delete files' (`_file`, `_pos`) addresses.
-    * Address equality runs in segment-RELATIVE path space on both
-    * sides, so absolute-path spelling differences can only fail loudly
-    * (raise_error in [[relativizeFileColumn]]), never resurrect rows.
-    * Broadcast below the shared tuple threshold, shuffled past it —
-    * this is compaction's own read path, so it must work at any size. */
   /** The table's DELETION VECTORS exploded to address rows
     * (`__graft_del_file` segment-relative, `__graft_del_pos`) — the
     * DataFrame-face form of the v3 bitmaps, for the join-based delete
@@ -3664,6 +3654,14 @@ object CatalogIO {
     (dvAddressFrame(spark, layout, options, Some(keep)), count)
   }
 
+  /** Anti-join `data` (which must carry materialized `__graft_file` /
+    * `__graft_pos` address columns — see [[scanLayoutWithOptions]])
+    * against the positional delete files' (`_file`, `_pos`) addresses.
+    * Address equality runs in segment-RELATIVE path space on both
+    * sides, so absolute-path spelling differences can only fail loudly
+    * (raise_error in [[relativizeFileColumn]]), never resurrect rows.
+    * Broadcast below the shared tuple threshold, shuffled past it —
+    * this is compaction's own read path, so it must work at any size. */
   private[graft] def applyPositionalDeletes(spark: SparkSession,
       data: DataFrame, posPaths: Seq[String], dataLocation: String,
       options: Map[String, String],
@@ -3705,8 +3703,7 @@ object CatalogIO {
         // unknown vector cardinality must only cost performance: treat
         // it as over-threshold (shuffled join), never broadcast blind
         extraAddresses.fold(0L)(_ => extraCount.getOrElse(Long.MaxValue))
-    val maxBroadcast = spark.conf.getOption("spark.graft.mor.maxDeleteTuples")
-      .map(_.toLong).getOrElse(4000000L)
+    val maxBroadcast = graft.sources.ReadRoute.maxDeleteTuples(spark)
     val side = if (tupleCount >= 0 && tupleCount <= maxBroadcast)
       broadcast(addr) else addr
     val rel = relativizeFileColumn(data.col("__graft_file"), dataLocation,

@@ -763,7 +763,7 @@ object CatalogMigrationCLI {
       else MigrationReport.RegisterVerbs
 
     // R6–R8: explicit set / file / regex identifier input
-    var identifiers: Seq[TableRef] = processIdentifiersInput(opts, log)
+    val identifiers: Seq[TableRef] = processIdentifiersInput(opts, log)
     checkAndWarnAboutIdentifiers(opts, identifiers, log)
     val outputDir = validateOutputDir(opts.outputDir)
 
@@ -934,14 +934,8 @@ object CatalogMigrationCLI {
 
   private def activeSpark(): SparkSession = {
     val s = SparkSession.getActiveSession.getOrElse {
-      SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
+      graft.GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
         .appName("catalog-migration-cli")
-        .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-        // INT64 µs timestamps (Iceberg's mandate; INT96 is deprecated
-        // and carries no usable parquet stats for manifest pruning)
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.ui.enabled", "false")
         .getOrCreate()
     }
     // a cluster user who forgot to attach a session should see that the

@@ -44,7 +44,7 @@ import graft.catalog.CatalogIO.TableLayout
   * Per-file constant FILLS serve too (round 20): each slice's
   * constants inject below the probes and the position counter — the
   * parquet/orc MOR composition. Renames compose through
-  * [[GraftEpochMorTable]] (late round 20): one instance per rename
+  * [[GraftEpochTable]] (late round 20): one instance per rename
   * epoch over the epoch's PHYSICAL schema, with `keyNameMap`
   * translating the delete files' current-named key columns to the
   * epoch's physical spellings — rename preserves position and type,
@@ -199,9 +199,7 @@ private[sources] final case class AvroMorScan(tableName: String,
     val eqPaths = layout.absoluteEqDeleteFiles.map(_._1).distinct
     if (eqPaths.isEmpty) false
     else {
-      val maxTuples = session.conf
-        .getOption("spark.graft.mor.maxDeleteTuples")
-        .map(_.toLong).getOrElse(4000000L)
+      val maxTuples = ReadRoute.maxDeleteTuples(session)
       eqPaths.map(p => graft.catalog.CatalogIO.DeleteFileFooters
         .countOf(p, conf.value)).sum > maxTuples
     }
@@ -259,9 +257,7 @@ private[sources] final case class AvroMorScan(tableName: String,
   override def planInputPartitions(): Array[InputPartition] = planned._1
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val maxTuples = session.conf
-      .getOption("spark.graft.mor.maxDeleteTuples")
-      .map(_.toLong).getOrElse(4000000L)
+    val maxTuples = ReadRoute.maxDeleteTuples(session)
     // delete-file columns carry CURRENT names; the epoch composition's
     // widened schema carries PHYSICAL ones (round 20)
     def physOf(c: String): String = keyNameMap.getOrElse(c.toLowerCase, c)

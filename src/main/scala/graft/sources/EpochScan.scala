@@ -5,15 +5,9 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.expressions.filter.Predicate
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.execution.datasources.v2.orc.OrcScanBuilder
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
-import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -30,12 +24,12 @@ import graft.catalog.CatalogIO.TableLayout
   * position-identical to the current schema — rows (and whole columnar
   * batches) pass through untouched. The only per-epoch work is at PLAN
   * time: the pruned schema and the pushed filters are translated into
-  * the epoch's physical names, one stock file scan (parquet or ORC —
-  * round 16 generalized the seam exactly like [[GraftMorTable]]) is
-  * built per epoch over that epoch's manifest slice, and the wrapper
-  * concatenates their partitions. Pushdown, vectorized reading, and
-  * codegen are all Spark's own; at 100 TB a rename stays a
-  * metadata-only commit and the scan stays one pass.
+  * the epoch's physical names, one scan is built per epoch over that
+  * epoch's manifest slice (the stock file scan, or the merge-on-read
+  * scan while deletes are live), and the grouped composite
+  * ([[GroupedScan]]) concatenates their partitions. Pushdown,
+  * vectorized reading, and codegen are all Spark's own; at 100 TB a
+  * rename stays a metadata-only commit and the scan stays one pass.
   *
   * Epoch count is bounded by the number of RENAME commits since the
   * last compaction (typically 1-2); compaction rewrites everything
@@ -50,38 +44,63 @@ final class GraftEpochTable(spark: SparkSession, tableName: String,
       s"renamed table $tableName has no recorded schema")))
 
   /** (current→physical lowercase name map, that epoch's segment-
-    * relative files). */
-  private val epochs: Seq[(Map[String, String], Seq[String])] =
-    layout.dataFiles.getOrElse(throw new IllegalStateException(
+    * relative files). Live deletes need the per-file seqs: they gate
+    * which delete files apply to which data file. */
+  private val epochs: Seq[(Map[String, String], Seq[String])] = {
+    val files = layout.dataFiles.getOrElse(throw new IllegalStateException(
       s"renamed table $tableName has no file manifest"))
-      .zip(layout.dataFileSeqs.getOrElse(
-        Seq.fill(layout.dataFiles.get.size)(0)))
+    val seqs = layout.dataFileSeqs.getOrElse(
+      if (layout.deleteFiles.isEmpty) Seq.fill(files.size)(0)
+      else throw new IllegalStateException(
+        s"renamed merge-on-read table $tableName has no per-file seqs"))
+    files.zip(seqs)
       .groupBy { case (_, s) => layout.physicalNamesAt(s) }
       .toSeq.sortBy(_._2.head._1)
       .map { case (m, fs) =>
         (m.map { case (k, v) => k.toLowerCase -> v }, fs.map(_._1))
       }
+  }
 
-  /** One file table per epoch ([[ReadRoute.fileTable]] — parquet/ORC
-    * manifest-planned when sizes allow, avro through the sync-split
-    * decoder, which resolves record fields BY NAME) over that epoch's
-    * slice, with that epoch's physical schema (current schema, names
-    * substituted — positions and types identical; partition columns
-    * never rename, refused at ALTER, so they keep their current names).
-    * MIXED epochs plan a per-epoch mixed composite: formats dispatch per
-    * file inside it, names per epoch out here. */
+  /** One table per epoch over that epoch's slice, under that epoch's
+    * physical schema (current schema, names substituted — positions
+    * and types identical; partition columns never rename, refused at
+    * ALTER, so they keep their current names):
+    *  - no live deletes: the file table ([[ReadRoute.fileTable]] —
+    *    parquet/ORC manifest-planned when sizes allow, avro through the
+    *    sync-split decoder, which resolves record fields BY NAME);
+    *  - live deletes (renames + deletes composed, round 20): the
+    *    merge-on-read table over the epoch SUB-LAYOUT — this epoch's
+    *    files with their deletes and seqs in lockstep, the physical
+    *    schema, no rename state — so the inner wrapper sees a plain
+    *    delete-live table in physical name space. Sound because engine
+    *    tables put renames and deletes in ONE seq space (commit
+    *    versions: `physicalNamesAt` and the `fileSeq < deleteSeq` gate
+    *    slice the same axis), and because ALTER RENAME refuses while
+    *    deletes live, so every delete file's key columns carry CURRENT
+    *    names, which the wrapper translates through the epoch's map
+    *    (`keyNameMap`). Positional deletes and DVs are name-free and
+    *    apply untranslated; eq-overflow spills per epoch over its
+    *    sub-layout; avro epochs ride the counting-read avro MOR;
+    *  - MIXED epochs: the per-epoch mixed composite, which picks the
+    *    file or merge-on-read table per format group itself; formats
+    *    dispatch per file inside it, names per epoch out here. */
   private val epochTables: Seq[(Map[String, String], Table with SupportsRead)] =
     epochs.map { case (m, rels) =>
-      val physSchema = StructType(currentSchema.fields.map(f =>
-        f.copy(name = m.getOrElse(f.name.toLowerCase, f.name))))
-      val table =
+      val physSchema = GroupedScan.renameSchema(currentSchema, m)
+      val name = s"$tableName@epoch"
+      val subLayout = layout.retainDataFiles(rels.toSet)
+        .copy(schemaDdl = Some(physSchema.toDDL), renameOps = Nil)
+      def files = ReadRoute.fileTable(name, layout, hadoopOpts,
+        schema = Some(physSchema), files = Some(rels))
+      val table: Table with SupportsRead =
         if (layout.dataFormat == "mixed")
-          new GraftMixedFormatTable(spark, s"$tableName@epoch",
-            layout.retainDataFiles(rels.toSet).copy(
-              schemaDdl = Some(physSchema.toDDL), renameOps = Nil),
-            hadoopOpts)
-        else ReadRoute.fileTable(s"$tableName@epoch", layout, hadoopOpts,
-          schema = Some(physSchema), files = Some(rels))
+          new GraftMixedFormatTable(spark, name, subLayout, hadoopOpts,
+            keyNameMap = m)
+        else if (layout.deleteFiles.isEmpty) files
+        else if (layout.dataFormat == "avro")
+          new GraftAvroMorTable(spark, name, subLayout, hadoopOpts,
+            keyNameMap = m)
+        else new GraftMorTable(files, subLayout, hadoopOpts, keyNameMap = m)
       (m, table)
     }
 
@@ -92,340 +111,34 @@ final class GraftEpochTable(spark: SparkSession, tableName: String,
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
 
+  /** Epoch 0's physical → current column names: the scan serves epoch
+    * 0's read schema under the current names. */
+  private val currentNameOf: Map[String, String] = {
+    val m = epochs.headOption.fold(Map.empty[String, String])(_._1)
+    currentSchema.fields.flatMap(f =>
+      m.get(f.name.toLowerCase).map(_ -> f.name)).toMap
+  }
+
+  // every filter is reported unhandled (re-evaluated above, over
+  // current-named rows); the per-epoch pushdown still prunes
+  // partitions, row groups, and pages
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new EpochScanBuilder(epochTables.map { case (m, t) =>
-      t.newScanBuilder(options) match {
-        // the stock builders share the FileScanBuilder pruning/pushdown
-        // seam; the avro builder implements the same two interfaces
-        // (round 20). Anything else would mis-serve physical names.
-        case f @ (_: ParquetScanBuilder | _: OrcScanBuilder |
-                  _: AvroScanBuilder | _: MixedScanBuilder) =>
-          (m, f.asInstanceOf[ScanBuilder with SupportsPushDownRequiredColumns
-            with SupportsPushDownCatalystFilters])
-        case other => throw new IllegalStateException(
-          s"epoch scan needs a parquet, ORC, avro, or mixed " +
-            s"pruning/pushdown delegate, got ${other.getClass.getName} " +
-            s"for $tableName")
-      }
-    })
+    new FanOutScanBuilder(epochTables.map { case (m, t) =>
+      (m, GroupedScan.pushDown(t.newScanBuilder(options), tableName))
+    }, (scans, buildCounts) => new EpochScan(scans, currentNameOf)(buildCounts))
 }
 
-/** Fans pruning and filter pushdown out to each epoch's stock builder,
-  * translated into that epoch's physical names. Filters are reported
-  * back as NOT fully handled (returned unchanged), so Spark re-checks
-  * them post-scan — the per-epoch pushdown still prunes partitions,
-  * row groups, and pages. */
-private final class EpochScanBuilder(
-    builders: Seq[(Map[String, String],
-      ScanBuilder with SupportsPushDownRequiredColumns
-        with SupportsPushDownCatalystFilters)])
-  extends ScanBuilder with SupportsPushDownRequiredColumns
-  with SupportsPushDownCatalystFilters {
-
-  private def renameSchema(s: StructType, m: Map[String, String]): StructType =
-    StructType(s.fields.map(f => f.copy(name = m.getOrElse(f.name.toLowerCase, f.name))))
-
-  private def renameExpr(e: Expression, m: Map[String, String]): Expression =
-    e.transform {
-      case a: AttributeReference if m.contains(a.name.toLowerCase) =>
-        a.withName(m(a.name.toLowerCase))
-    }
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    builders.foreach { case (m, b) => b.pruneColumns(renameSchema(requiredSchema, m)) }
-
-  override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
-    builders.foreach { case (m, b) => b.pushFilters(filters.map(renameExpr(_, m))) }
-    filters // evaluated again post-scan; per-epoch pushdown still prunes
-  }
-
-  override def pushedFilters: Array[Predicate] =
-    builders.headOption.map(_._2.pushedFilters).getOrElse(Array.empty)
-
-  override def build(): Scan =
-    new EpochScan(builders.map { case (m, b) => (m, b.build()) })
-}
-
-/** One epoch's planned file slices (round 20: any inner partition —
-  * parquet/ORC FilePartitions or the avro decoder's AvroSlices). */
-private[sources] final case class EpochFilePartition(epoch: Int,
-    inner: InputPartition) extends InputPartition {
-  override def preferredLocations(): Array[String] = inner.preferredLocations()
-}
-
-/** Concatenates the per-epoch stock scans. Rows and columnar batches
-  * pass through untouched (position-identical layouts); readSchema maps
+/** Concatenates the per-epoch scans. Rows and columnar batches pass
+  * through untouched (position-identical layouts); readSchema maps
   * epoch 0's (pruned, physically-named) schema back to current names. */
-private final class EpochScan(
-    private val scans: Seq[(Map[String, String], Scan)])
-  extends Scan with Batch {
+private final class EpochScan(scans: Seq[Scan],
+    currentNameOf: Map[String, String])(buildCounts: Seq[Option[(Int, Int)]])
+  extends GroupedScan(scans.map(Some(_)))(buildCounts) {
 
-  // physical→current per epoch 0 (maps are current→physical, lowercased)
-  private val out: StructType = {
-    val (m, s) = scans.head
-    val back = m.map(_.swap)
-    StructType(s.readSchema().fields.map(f =>
-      f.copy(name = back.getOrElse(f.name, f.name))))
-  }
+  private val out: StructType = StructType(scans.head.readSchema().fields.map(f =>
+    f.copy(name = currentNameOf.getOrElse(f.name, f.name))))
 
   override def readSchema(): StructType = out
   override def description(): String =
-    s"graft-epochs(${scans.size}: ${scans.head._2.description()})"
-  override def toBatch: Batch = this
-  // Spark refuses a scan whose partitions MIX row-based and columnar
-  // readers — a mixed epoch with an avro group (row-only) alongside
-  // vectorized parquet/orc epochs demotes the WHOLE scan to rows,
-  // exactly the MixedScan rule (late round 20)
-  override def columnarSupportMode(): Scan.ColumnarSupportMode =
-    if (uniformColumnar) Scan.ColumnarSupportMode.PARTITION_DEFINED
-    else Scan.ColumnarSupportMode.UNSUPPORTED
-
-  private lazy val uniformColumnar: Boolean =
-    planned.map(p => factory.supportColumnarReads(p)).distinct.size <= 1
-
-  override def equals(other: Any): Boolean = other match {
-    case e: EpochScan => scans == e.scans
-    case _ => false
-  }
-  override def hashCode(): Int = scans.hashCode()
-
-  private lazy val planned: Array[InputPartition] =
-    scans.zipWithIndex.flatMap { case ((_, s), i) =>
-      s.toBatch.planInputPartitions().map(p =>
-        EpochFilePartition(i, p): InputPartition)
-    }.toArray
-
-  override def planInputPartitions(): Array[InputPartition] = planned
-
-  private lazy val factory: PartitionReaderFactory =
-    new EpochReaderFactory(
-      scans.map(_._2.toBatch.createReaderFactory()).toArray)
-
-  override def createReaderFactory(): PartitionReaderFactory = factory
-}
-
-/** Dispatches each partition to its epoch's stock reader factory. */
-private final class EpochReaderFactory(inners: Array[PartitionReaderFactory])
-  extends PartitionReaderFactory {
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val ep = p.asInstanceOf[EpochFilePartition]
-    inners(ep.epoch).createReader(ep.inner)
-  }
-
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val ep = p.asInstanceOf[EpochFilePartition]
-    inners(ep.epoch).createColumnarReader(ep.inner)
-  }
-
-  override def supportColumnarReads(p: InputPartition): Boolean = {
-    val ep = p.asInstanceOf[EpochFilePartition]
-    inners(ep.epoch).supportColumnarReads(ep.inner)
-  }
-}
-
-/** RENAMES + LIVE DELETES composed (round 20 — judge r19 #6): one
-  * merge-on-read table per rename EPOCH, concatenated — epochs below,
-  * probes above. Sound because engine tables put renames and deletes
-  * in ONE seq space (commit versions: `physicalNamesAt` and the
-  * `fileSeq < deleteSeq` gate slice the same axis), and because ALTER
-  * RENAME refuses while deletes live, so every delete file's key
-  * columns carry CURRENT names — each epoch's MOR probe translates
-  * them to its physical spellings ([[GraftMorTable]]'s `keyNameMap`;
-  * rename preserves position and type, so the translated probe reads
-  * the same bytes). Name translation is plan-time only: rows pass
-  * through position-identical, exactly the [[GraftEpochTable]] trick.
-  *
-  * Scope: parquet/ORC layouts — and AVRO since late round 20 (the
-  * counting-read [[GraftAvroMorTable]] rides per epoch with the same
-  * key translation) — with equality deletes under the broadcast
-  * threshold (the eq-overflow spill reads one schema per table — over
-  * the threshold this refuses with compaction named). POSITIONAL
-  * deletes and DVs compose too (late round 20): position addressing is
-  * name-free, so each epoch's sub-layout applies its own files'
-  * positional state untranslated. */
-final class GraftEpochMorTable(spark: SparkSession, tableName: String,
-    layout: TableLayout, hadoopOpts: Map[String, String]) extends Table
-  with SupportsRead {
-
-  private val currentSchema: StructType = StructType.fromDDL(
-    layout.schemaDdl.getOrElse(throw new IllegalStateException(
-      s"renamed merge-on-read table $tableName has no recorded schema")))
-
-  // POSITIONAL deletes and DVs compose with renames (late round 20):
-  // position addressing is name-free, and each epoch's sub-layout
-  // carries its own files' positional state in lockstep
-  // (retainDataFiles), so the per-epoch MOR wrapper applies them with
-  // no translation at all. The write face (scanLayoutAddressed) reads
-  // per epoch under physical names and renames back before predicates.
-  // eq-overflow + renames COMPOSE (late round 20): each epoch's MOR
-  // wrapper spills independently over ITS sub-layout, with the spill's
-  // data-side key reads and join resolving delete columns through the
-  // epoch's keyNameMap (spillEqualityDeletes) — no whole-table-schema
-  // assumption remains.
-
-  /** (current→physical lowercase map, that epoch's segment-relative
-    * files). */
-  private val epochs: Seq[(Map[String, String], Seq[String])] =
-    layout.dataFiles.getOrElse(throw new IllegalStateException(
-      s"renamed merge-on-read table $tableName has no file manifest"))
-      .zip(layout.dataFileSeqs.getOrElse(throw new IllegalStateException(
-        s"renamed merge-on-read table $tableName has no per-file seqs")))
-      .groupBy { case (_, s) => layout.physicalNamesAt(s) }
-      .toSeq.sortBy(_._2.head._1)
-      .map { case (m, fs) =>
-        (m.map { case (k, v) => k.toLowerCase -> v }, fs.map(_._1))
-      }
-
-  private val epochTables: Seq[(Map[String, String], Table with SupportsRead)] =
-    epochs.map { case (m, rels) =>
-      val physSchema = StructType(currentSchema.fields.map(f =>
-        f.copy(name = m.getOrElse(f.name.toLowerCase, f.name))))
-      // the epoch SUB-LAYOUT: this epoch's files (deletes + seqs ride
-      // along in lockstep), the PHYSICAL schema, no rename state — the
-      // inner MOR wrapper sees a plain delete-live table in physical
-      // name space. AVRO epochs ride the counting-read avro MOR, MIXED
-      // epochs the per-epoch mixed composite (each format group in its
-      // own MOR); every variant translates delete keys through `m`.
-      val subLayout = layout.retainDataFiles(rels.toSet)
-        .copy(schemaDdl = Some(physSchema.toDDL), renameOps = Nil)
-      val table: Table with SupportsRead =
-        if (layout.dataFormat == "avro")
-          new GraftAvroMorTable(spark, s"$tableName@epochmor", subLayout,
-            hadoopOpts, keyNameMap = m)
-        else if (layout.dataFormat == "mixed")
-          new GraftMixedFormatTable(spark, s"$tableName@epochmor",
-            subLayout, hadoopOpts, keyNameMap = m)
-        else new GraftMorTable(
-          ReadRoute.fileTable(s"$tableName@epochmor", layout, hadoopOpts,
-            schema = Some(physSchema), files = Some(rels)),
-          subLayout, hadoopOpts, keyNameMap = m)
-      (m, table)
-    }
-
-  override def name(): String = tableName
-  override def schema(): StructType = currentSchema
-  override def properties(): util.Map[String, String] =
-    util.Collections.emptyMap()
-  override def partitioning(): Array[Transform] = Array.empty
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new EpochMorScanBuilder(epochTables.map { case (m, t) =>
-      (m, t.newScanBuilder(options)
-        .asInstanceOf[ScanBuilder with SupportsPushDownRequiredColumns])
-    })
-}
-
-/** Fans pruning/pushdown out to each epoch's MOR builder, translated
-  * into that epoch's physical names; every filter is reported unhandled
-  * (re-evaluated above, over current-named rows). The avro MOR builder
-  * takes no filters at all (nothing pushes below the record decode) —
-  * filter forwarding is conditional on the delegate's interface. */
-private final class EpochMorScanBuilder(
-    builders: Seq[(Map[String, String],
-      ScanBuilder with SupportsPushDownRequiredColumns)])
-  extends ScanBuilder with SupportsPushDownRequiredColumns
-  with SupportsPushDownCatalystFilters {
-
-  private var required: Option[StructType] = None
-
-  private def renameSchema(s: StructType, m: Map[String, String]): StructType =
-    StructType(s.fields.map(f =>
-      f.copy(name = m.getOrElse(f.name.toLowerCase, f.name))))
-
-  private def renameExpr(e: Expression, m: Map[String, String]): Expression =
-    e.transform {
-      case a: AttributeReference if m.contains(a.name.toLowerCase) =>
-        a.withName(m(a.name.toLowerCase))
-    }
-
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    required = Some(requiredSchema)
-    builders.foreach { case (m, b) =>
-      b.pruneColumns(renameSchema(requiredSchema, m)) }
-  }
-
-  override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
-    builders.foreach {
-      case (m, b: SupportsPushDownCatalystFilters) =>
-        b.pushFilters(filters.map(renameExpr(_, m)))
-      case _ => () // the avro MOR builder: nothing pushes below the decode
-    }
-    filters // evaluated again post-scan, over current-named rows
-  }
-
-  override def pushedFilters: Array[Predicate] = Array.empty
-
-  override def build(): Scan =
-    new EpochMorScan(builders.map(_._2.build()),
-      required.getOrElse(throw new IllegalStateException(
-        "epoch+MOR scan built before pruning")))
-}
-
-private[sources] final case class EpochMorPartition(epoch: Int,
-    inner: InputPartition) extends InputPartition {
-  override def preferredLocations(): Array[String] = inner.preferredLocations()
-}
-
-/** Concatenates the per-epoch MOR scans; rows pass through untouched
-  * (rename preserves positions and types), so the served schema is just
-  * the REQUESTED current-named one. */
-private final class EpochMorScan(private val scans: Seq[Scan],
-    requiredSchema: StructType) extends Scan with Batch {
-
-  override def readSchema(): StructType = requiredSchema
-  override def description(): String =
-    s"graft-epoch-mor(${scans.size}: ${scans.head.description()})"
-  override def toBatch: Batch = this
-  // same demotion rule as EpochScan/MixedScan: a row-only group in
-  // any epoch demotes the whole scan (late round 20)
-  override def columnarSupportMode(): Scan.ColumnarSupportMode =
-    if (uniformColumnar) Scan.ColumnarSupportMode.PARTITION_DEFINED
-    else Scan.ColumnarSupportMode.UNSUPPORTED
-
-  private lazy val uniformColumnar: Boolean =
-    planned.map(p => factory.supportColumnarReads(p)).distinct.size <= 1
-
-  override def equals(other: Any): Boolean = other match {
-    case e: EpochMorScan => scans == e.scans
-    case _ => false
-  }
-  override def hashCode(): Int = scans.hashCode()
-
-  private lazy val planned: Array[InputPartition] =
-    scans.zipWithIndex.flatMap { case (s, i) =>
-      s.toBatch.planInputPartitions().map(p =>
-        EpochMorPartition(i, p): InputPartition)
-    }.toArray
-
-  override def planInputPartitions(): Array[InputPartition] = planned
-
-  private lazy val factory: PartitionReaderFactory =
-    new EpochMorReaderFactory(
-      scans.map(_.toBatch.createReaderFactory()).toArray)
-
-  override def createReaderFactory(): PartitionReaderFactory = factory
-}
-
-private final class EpochMorReaderFactory(
-    inners: Array[PartitionReaderFactory]) extends PartitionReaderFactory {
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val ep = p.asInstanceOf[EpochMorPartition]
-    inners(ep.epoch).createReader(ep.inner)
-  }
-
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val ep = p.asInstanceOf[EpochMorPartition]
-    inners(ep.epoch).createColumnarReader(ep.inner)
-  }
-
-  override def supportColumnarReads(p: InputPartition): Boolean = {
-    val ep = p.asInstanceOf[EpochMorPartition]
-    inners(ep.epoch).supportColumnarReads(ep.inner)
-  }
+    s"graft-epochs(${scans.size}: ${scans.head.description()})"
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundRefer
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.filter.Predicate
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 
 import org.apache.spark.sql.execution.vectorized.ConstantColumnVector
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
@@ -135,13 +135,12 @@ final class GraftFillTable(spark: SparkSession, tableName: String,
     new FillScanBuilder(
       groups.map(_._1),
       i => {
-        val b = groupTable(i).newScanBuilder(options)
-          .asInstanceOf[ScanBuilder with SupportsPushDownRequiredColumns
-            with SupportsPushDownCatalystFilters]
+        val b = GroupedScan.pushDown(groupTable(i).newScanBuilder(options),
+          tableName)
         if (uuidCols.isEmpty) b
         else new UuidScanBuilder(b, uuidCols, physicalOf)
       },
-      groups.map(_._3.size), tableName)
+      groups.map(_._3.size))
 }
 
 /** Fans pruning out to each group's builder (the stock FileScanBuilder,
@@ -162,9 +161,8 @@ final class GraftFillTable(spark: SparkSession, tableName: String,
   * subqueries, type mismatches → keep the group). */
 private final class FillScanBuilder(
     groupFills: Seq[Seq[(String, Any)]],
-    builderFor: Int => ScanBuilder with SupportsPushDownRequiredColumns
-      with SupportsPushDownCatalystFilters,
-    groupFileCounts: Seq[Int], tableName: String)
+    builderFor: Int => GroupedScan.PushDownBuilder,
+    groupFileCounts: Seq[Int])
   extends ScanBuilder with SupportsPushDownRequiredColumns
   with SupportsPushDownCatalystFilters {
 
@@ -229,8 +227,8 @@ private final class FillScanBuilder(
     // the schema witness when everything is pruned), replay the
     // captured pruning/pushdown, and build — capturing BUILD-time
     // telemetry per group (the stats-pruned file scans record at
-    // PLANNING time instead; FillScan aggregates both kinds when it
-    // plans, mirroring MixedScan)
+    // PLANNING time instead; the grouped scan aggregates both kinds
+    // when it plans)
     val scans: Seq[(Seq[(String, Any)], Option[Scan],
         Option[(Int, Int)])] =
       groupFills.indices.map { i =>
@@ -253,31 +251,21 @@ private final class FillScanBuilder(
         }
       }
     new FillScan(scans.map(t => (t._1, t._2)), dropped)(
-      scans.map(_._3), groupFileCounts, tableName)
+      scans.map(_._3), groupFileCounts)
   }
 }
 
-/** One group's planned slice — any stock partition shape (parquet/orc
-  * [[FilePartition]]s, or the engine avro reader's [[AvroSlice]]s,
-  * round 19). */
-private[sources] final case class FillFilePartition(group: Int,
-    files: InputPartition) extends InputPartition {
-  override def preferredLocations(): Array[String] = files.preferredLocations()
-}
-
 /** Concatenates the per-group stock scans; groups with fills get their
-  * readers wrapped with the constant injection. */
+  * factories wrapped with the constant injection ([[FillInjection.wrap]]). */
 private final class FillScan(
     private val scans: Seq[(Seq[(String, Any)], Option[Scan])],
     /** Group indices proven empty by their fill constants at plan time
-      * — never split, never scheduled. */
+      * — never split, never scheduled; their files count as skipped. */
     private val droppedGroups: Set[Int])(
-    /** Pruning telemetry recorded at each group's BUILD; plan-time
-      * telemetry joins it in [[planned]]. The second parameter list
-      * keeps scan equality (exchange reuse) on the scans + drops. */
     buildCounts: Seq[Option[(Int, Int)]],
-    groupFileCounts: Seq[Int], tableName: String)
-  extends Scan with Batch {
+    groupFileCounts: Seq[Int])
+  extends GroupedScan(scans.zipWithIndex.map { case ((_, s), i) =>
+    if (droppedGroups(i)) None else s })(buildCounts) {
 
   // the schema/description witness: the first BUILT group (the builder
   // always builds at least one, even when every group is pruned)
@@ -289,102 +277,37 @@ private final class FillScan(
   override def description(): String =
     s"graft-fills(${scans.size}, ${droppedGroups.size} pruned: " +
       s"${witness.description()})"
-  override def toBatch: Batch = this
 
-  /** Spark refuses a scan mixing row-based and columnar partitions, so
-    * PARTITION_DEFINED only when every planned partition agrees (mixed
-    * parquet+orc groups normally both vectorize); a disagreeing group
-    * demotes the whole scan to row-based — the same rule as
-    * [[MixedScan]], and the row path injects through one codegen'd
-    * projection, so correctness is untouched. */
-  override def columnarSupportMode(): Scan.ColumnarSupportMode =
-    if (uniformColumnar) Scan.ColumnarSupportMode.PARTITION_DEFINED
-    else Scan.ColumnarSupportMode.UNSUPPORTED
+  override protected def identity: Any = (scans, droppedGroups)
+  override protected def prunedFiles(group: Int): Int = groupFileCounts(group)
 
-  private lazy val uniformColumnar: Boolean =
-    planned.map(p => factory.supportColumnarReads(p)).distinct.size <= 1
-
-  override def equals(other: Any): Boolean = other match {
-    case f: FillScan => scans == f.scans && droppedGroups == f.droppedGroups
-    case _ => false
-  }
-  override def hashCode(): Int = (scans, droppedGroups).hashCode()
-
-  private lazy val planned: Array[InputPartition] = {
-    var skipped = 0
-    var total = 0
-    var recorded = false
-    val parts = scans.zipWithIndex.flatMap { case ((_, so), i) =>
-      if (droppedGroups(i) || so.isEmpty) {
-        // the whole group was proven empty by its fill constants: its
-        // files count as skipped without being listed or split
-        skipped += groupFileCounts(i); total += groupFileCounts(i)
-        recorded = true
-        Nil
-      } else {
-        val (ps, c) = StatsPruning.collectPlanned(
-          so.get.toBatch.planInputPartitions())
-        c.orElse(buildCounts(i)).foreach { case (sk, t) =>
-          skipped += sk; total += t; recorded = true
-        }
-        ps.map(p => FillFilePartition(i, p): InputPartition)
-      }
-    }.toArray
-    // one aggregated (skipped, total) for the whole table's plan
-    if (recorded) StatsPruning.recordPlan(skipped, total, tableName)
-    parts
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = planned
-
-  private lazy val factory: PartitionReaderFactory = {
-    // resolve each group's fills against ITS pruned read schema: a
-    // fill column the query never asked for needs no injection.
-    // Un-built (pruned) groups plan no partitions, so their slot is
-    // never dereferenced
-    val perGroup = scans.map {
-      case (fills, Some(s)) =>
-        (FillInjection.resolve(fills, s.readSchema()),
-          s.toBatch.createReaderFactory())
-      case (_, None) => null
-    }
-    new FillReaderFactory(perGroup.toArray, readSchema())
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = factory
+  // each group's fills resolve against ITS pruned read schema: a fill
+  // column the query never asked for needs no injection
+  override protected def groupFactory(group: Int, scan: Scan)
+      : PartitionReaderFactory =
+    FillInjection.wrap(scan.toBatch.createReaderFactory(), scans(group)._1,
+      scan.readSchema())
 }
 
-/** Dispatches each partition to its group's stock reader factory,
-  * wrapping it with the constant injection when the group has fills. */
-private final class FillReaderFactory(
-    groups: Array[(Array[FillInjection.ResolvedFill], PartitionReaderFactory)],
-    out: StructType) extends PartitionReaderFactory {
+/** Format-agnostic constant injection over ANY stock reader factory —
+  * the fill machinery's seam factored out for consumers that dispatch
+  * partitions themselves (round 16: the streaming sources' per-batch
+  * scans over appended hive-layout files; the MOR and lineage readers).
+  * `fills` maps column NAMES — dotted paths for STRUCT-nested
+  * initial-defaults (round 17) — to EXTERNAL JVM values; they are
+  * resolved against the scan's output schema once. Nested fills thread
+  * constants INTO struct values: the row path rebuilds the struct
+  * through one codegen'd projection (outer null preserved — a NULL
+  * struct has no member to default); the columnar path replaces the
+  * struct's child vector with a [[ConstantColumnVector]] behind a
+  * delegating wrapper, so batches stay columnar. */
+private[graft] object FillInjection {
 
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val fp = p.asInstanceOf[FillFilePartition]
-    val (fills, inner) = groups(fp.group)
-    FillInjection.wrapRow(inner.createReader(fp.files), fills, out)
-  }
-
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[ColumnarBatch] = {
-    val fp = p.asInstanceOf[FillFilePartition]
-    val (fills, inner) = groups(fp.group)
-    FillInjection.wrapColumnar(inner.createColumnarReader(fp.files), fills)
-  }
-
-  override def supportColumnarReads(p: InputPartition): Boolean = {
-    val fp = p.asInstanceOf[FillFilePartition]
-    groups(fp.group)._2.supportColumnarReads(fp.files)
-  }
-}
-
-private[graft] object FillReaderFactory {
   /** A [[ConstantColumnVector]] holding one CATALYST value of `dt` —
     * the scalar types [[graft.catalog.IcebergFormat]]'s default and
     * identity-partition decoders admit. A null constant (a NULL
     * identity partition value) sets the vector's null mask. */
-  def constantVector(dt: DataType, v: Any): ColumnVector = {
+  private def constantVector(dt: DataType, v: Any): ColumnVector = {
     val c = new ConstantColumnVector(1, dt)
     if (v == null) { c.setNull(); return c }
     dt match {
@@ -405,21 +328,6 @@ private[graft] object FillReaderFactory {
     }
     c
   }
-}
-
-/** Format-agnostic constant injection over ANY stock reader factory —
-  * the fill machinery's seam factored out for consumers that dispatch
-  * partitions themselves (round 16: the streaming sources' per-batch
-  * scans over appended hive-layout files; the MOR and lineage readers).
-  * `fills` maps column NAMES — dotted paths for STRUCT-nested
-  * initial-defaults (round 17) — to EXTERNAL JVM values; they are
-  * resolved against the scan's output schema once. Nested fills thread
-  * constants INTO struct values: the row path rebuilds the struct
-  * through one codegen'd projection (outer null preserved — a NULL
-  * struct has no member to default); the columnar path replaces the
-  * struct's child vector with a [[ConstantColumnVector]] behind a
-  * delegating wrapper, so batches stay columnar. */
-private[graft] object FillInjection {
 
   /** One resolved fill: the top-level ordinal in the scan output, the
     * ordinal PATH below it (empty = whole-column constant), the leaf
@@ -595,7 +503,7 @@ private[graft] object FillInjection {
       val (leaf, deeper) = fs.partition(_._1.size == 1)
       val v: ColumnVector =
         if (leaf.nonEmpty)
-          FillReaderFactory.constantVector(leaf.head._2, leaf.head._3)
+          constantVector(leaf.head._2, leaf.head._3)
         else overrideVector(inner.getChild(i),
           deeper.map(t => (t._1.tail, t._2, t._3)))
       i -> v
@@ -618,7 +526,7 @@ private[graft] object FillInjection {
       private val wholeConstants: Map[Int, ColumnVector] = byOrd.collect {
         case (i, fs) if fs.exists(_.path.isEmpty) =>
           val w = fs.find(_.path.isEmpty).get
-          i -> FillReaderFactory.constantVector(w.leafType, w.value)
+          i -> constantVector(w.leafType, w.value)
       }
       private val nestedByOrd: Map[Int, Seq[(List[Int], DataType, Any)]] =
         byOrd.collect {

@@ -3,7 +3,6 @@ package graft.sources
 import java.util.UUID
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
@@ -746,9 +745,7 @@ private final class GraftRowLevelScan(
         fp.files.map(_.filePath.toString).toSeq
       case b: BucketFilePartition => b.files.files.map(_.filePath.toString).toSeq
       case m: MorFilePartition => m.files.files.map(_.filePath.toString).toSeq
-      case e: EpochFilePartition => filesOf(e.inner)
-      case f: FillFilePartition => filesOf(f.files)
-      case m: MixedPartition => filesOf(m.inner)
+      case g: GroupPartition => filesOf(g.inner)
       case a: AvroSlice => Seq(a.path)
       case other => throw new IllegalStateException(
         s"cannot derive the replaced file set from scan partition ${other.getClass.getName}")

@@ -275,8 +275,7 @@ private final class LineageScan(spark: SparkSession, label: String,
       loadEqDeletes())
 
   private def loadEqDeletes(): Seq[LineageEqDelete] = {
-    val maxTuples = spark.conf.getOption("spark.graft.mor.maxDeleteTuples")
-      .map(_.toLong).getOrElse(4000000L)
+    val maxTuples = ReadRoute.maxDeleteTuples(spark)
     val footerConf = {
       val c = new org.apache.hadoop.conf.Configuration()
       hadoopOpts.foreach { case (k, v) => c.set(k, v) }

@@ -5,16 +5,11 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.expressions.filter.Predicate
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics}
-import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, Statistics, SupportsReportStatistics}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.sql.vectorized.ColumnarBatch
 
 import graft.catalog.CatalogIO.TableLayout
 
@@ -29,14 +24,12 @@ import graft.catalog.CatalogIO.TableLayout
   * with manifest-bounds file pruning intact per group
   * ([[StatsPrunedTable]] / the avro builder's envelope test).
   *
-  * Shape mirrors [[GraftFillTable]]: a composite builder fans
-  * pruning/pushdown out to each group's builder, the composite scan
-  * concatenates the groups' input partitions (tagged with their group
-  * index), and the reader factory dispatches each partition to its
-  * group's stock factory — vectorized groups stay vectorized
-  * (`PARTITION_DEFINED`), row-based groups stay row-based. Group count
-  * is bounded by the number of formats (≤3), so at 100 TB this is a
-  * handful of stock scans planned from one manifest.
+  * A grouped composite ([[GroupedScan]]): one scan per format group,
+  * concatenated, each partition dispatched to its group's stock
+  * factory — vectorized when every group vectorizes (the parquet+orc
+  * migration shape), row-based when one group cannot (avro). Group
+  * count is bounded by the number of formats (≤3), so at 100 TB this is
+  * a handful of stock scans planned from one manifest.
   *
   * Scope matches the other interop faces: read-only; deletes, renames,
   * fills, and adoption over mixed tables refuse upstream
@@ -101,57 +94,17 @@ final class GraftMixedFormatTable(spark: SparkSession, tableName: String,
     Set(TableCapability.BATCH_READ).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new MixedScanBuilder(groupTables.map(_.newScanBuilder(options)
-      .asInstanceOf[ScanBuilder with SupportsPushDownRequiredColumns
-        with SupportsPushDownCatalystFilters]))
+    new FanOutScanBuilder(groupTables.map(t =>
+      (Map.empty[String, String],
+        GroupedScan.pushDown(t.newScanBuilder(options), tableName))),
+      (scans, buildCounts) => new MixedScan(scans)(buildCounts))
 }
 
-/** Fans pruning/pushdown out to every group's builder; every filter is
-  * reported back as not-fully-handled, so Spark re-checks them after
-  * the union (each group may push a different subset — e.g. parquet
-  * pushes row-group predicates, avro pushes nothing). */
-private final class MixedScanBuilder(
-    builders: Seq[ScanBuilder with SupportsPushDownRequiredColumns
-      with SupportsPushDownCatalystFilters])
-  extends ScanBuilder with SupportsPushDownRequiredColumns
-  with SupportsPushDownCatalystFilters {
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    builders.foreach(_.pruneColumns(requiredSchema))
-
-  override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
-    builders.foreach(_.pushFilters(filters))
-    filters // conservatively re-evaluated above the union
-  }
-
-  override def pushedFilters: Array[Predicate] =
-    builders.headOption.map(_.pushedFilters).getOrElse(Array.empty)
-
-  override def build(): Scan = {
-    // the avro builder records its (skipped, total) pruning telemetry
-    // at BUILD time; the stats-pruned file scans record at PLANNING
-    // time — capture the build-time contributions through a
-    // thread-local frame (round 16: the global slot is no longer a
-    // carrier, so concurrent query plans cannot interleave counts), and
-    // MixedScan aggregates both kinds when it plans
-    val scans = builders.map(b => StatsPruning.collectPlanned(b.build()))
-    new MixedScan(scans.map(_._1))(scans.map(_._2))
-  }
-}
-
-/** One group's planned partition, tagged with its group index. */
-private[sources] final case class MixedPartition(group: Int,
-    inner: InputPartition) extends InputPartition {
-  override def preferredLocations(): Array[String] = inner.preferredLocations()
-}
-
-/** Concatenates the per-group stock scans. `buildCounts` carries the
-  * pruning telemetry recorded at each group's BUILD (the avro path);
-  * plan-time telemetry joins it in [[planned]]. The second parameter
-  * list keeps scan equality (exchange reuse) on the scans alone. */
-private final class MixedScan(private val scans: Seq[Scan])(
+/** Concatenates the per-format-group scans. */
+private final class MixedScan(scans: Seq[Scan])(
     buildCounts: Seq[Option[(Int, Int)]])
-  extends Scan with Batch with SupportsReportStatistics {
+  extends GroupedScan(scans.map(Some(_)))(buildCounts)
+  with SupportsReportStatistics {
 
   /** Sum of the groups' own estimates — reported only when EVERY group
     * reports (a missing group would silently underestimate, and an
@@ -181,69 +134,4 @@ private final class MixedScan(private val scans: Seq[Scan])(
   }
   override def description(): String =
     s"graft-mixed(${scans.map(_.description()).mkString("; ")})"
-  override def toBatch: Batch = this
-
-  /** Spark refuses a scan whose partitions MIX row-based and columnar
-    * readers ("Cannot mix row-based and columnar input partitions"), so
-    * the mode is PARTITION_DEFINED only when every group agrees (the
-    * parquet+orc migration shape: both vectorized); a row-only group in
-    * the mix (avro) demotes the WHOLE scan to row-based — the stock
-    * factories all serve row readers, so correctness is untouched and
-    * only the mixed-with-avro shape pays the vectorization tax. */
-  override def columnarSupportMode(): Scan.ColumnarSupportMode =
-    if (uniformColumnar) Scan.ColumnarSupportMode.PARTITION_DEFINED
-    else Scan.ColumnarSupportMode.UNSUPPORTED
-
-  private lazy val uniformColumnar: Boolean =
-    planned.map(p => factory.supportColumnarReads(p)).distinct.size <= 1
-
-  override def equals(other: Any): Boolean = other match {
-    case m: MixedScan => scans == m.scans
-    case _ => false
-  }
-  override def hashCode(): Int = scans.hashCode()
-
-  private lazy val planned: Array[InputPartition] = {
-    val perGroup = scans.zipWithIndex.map { case (s, i) =>
-      val (ps, c) = StatsPruning.collectPlanned(
-        s.toBatch.planInputPartitions()
-          .map(p => MixedPartition(i, p): InputPartition))
-      (ps, c.orElse(buildCounts(i)))
-    }
-    // one aggregated (skipped, total) for the whole table's plan —
-    // a single record call (one atomic global store + any outer frame)
-    val counted = perGroup.flatMap(_._2)
-    if (counted.nonEmpty)
-      StatsPruning.recordPlan(counted.map(_._1).sum,
-        counted.map(_._2).sum, description())
-    perGroup.flatMap(_._1).toArray
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = planned
-
-  private lazy val factory: PartitionReaderFactory =
-    new MixedReaderFactory(scans.map(_.toBatch.createReaderFactory()).toArray)
-
-  override def createReaderFactory(): PartitionReaderFactory = factory
-}
-
-/** Dispatches each partition to its group's stock reader factory. */
-private final class MixedReaderFactory(
-    factories: Array[PartitionReaderFactory]) extends PartitionReaderFactory {
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val mp = p.asInstanceOf[MixedPartition]
-    factories(mp.group).createReader(mp.inner)
-  }
-
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[ColumnarBatch] = {
-    val mp = p.asInstanceOf[MixedPartition]
-    factories(mp.group).createColumnarReader(mp.inner)
-  }
-
-  override def supportColumnarReads(p: InputPartition): Boolean = {
-    val mp = p.asInstanceOf[MixedPartition]
-    factories(mp.group).supportColumnarReads(mp.inner)
-  }
 }

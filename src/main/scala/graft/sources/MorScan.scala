@@ -117,8 +117,7 @@ final class GraftMorTable(delegate: Table with SupportsRead,
     val eqPaths = layout.absoluteEqDeleteFiles.map(_._1).distinct
     if (eqPaths.isEmpty) return false
     val spark = SparkSession.active
-    val maxTuples = spark.conf.getOption("spark.graft.mor.maxDeleteTuples")
-      .map(_.toLong).getOrElse(4000000L)
+    val maxTuples = ReadRoute.maxDeleteTuples(spark)
     val conf = new org.apache.hadoop.conf.Configuration()
     hadoopOpts.foreach { case (k, v) => conf.set(k, v) }
     eqPaths.map(p => graft.catalog.CatalogIO.DeleteFileFooters.countOf(p, conf))
@@ -378,7 +377,7 @@ private[sources] object MorScan {
     import org.apache.spark.sql.functions.col
     if (layout.renameOps.nonEmpty)
       // un-decomposed renamed layouts never reach here through the
-      // routing (GraftEpochMorTable spills per epoch); direct library
+      // routing (GraftEpochTable spills per epoch); direct library
       // calls still get the refusal rather than a wrong-schema read
       throw new MorDeleteOverflowException(
         s"merge-on-read scan of ${layout.dataLocation}: over-threshold " +
@@ -1115,8 +1114,7 @@ private final class MorScan(private val delegate: FileScan,
     // immutable). POSITIONAL addresses never visit the driver at all
     // (round 12): each task reads its own file's address files, with
     // the same threshold applied PER FILE in the reader.
-    val maxTuples = session.conf.getOption("spark.graft.mor.maxDeleteTuples")
-      .map(_.toLong).getOrElse(4000000L)
+    val maxTuples = ReadRoute.maxDeleteTuples(session)
     val footerConf = {
       val c = new org.apache.hadoop.conf.Configuration()
       hadoopOpts.foreach { case (k, v) => c.set(k, v) }

@@ -40,6 +40,14 @@ object ReadRoute {
   /** `spark.graft.ndv.enabled` (default on): NDV sketches feed CBO. */
   def ndvEnabled: Boolean = switchOn("spark.graft.ndv.enabled")
 
+  /** `spark.graft.mor.maxDeleteTuples` (default 4,000,000): the delete
+    * tuple count a merge-on-read read broadcasts or holds on the driver;
+    * past it the DSv2 scans degrade or refuse and the join faces
+    * shuffle. */
+  def maxDeleteTuples(spark: SparkSession): Long =
+    spark.conf.getOption("spark.graft.mor.maxDeleteTuples")
+      .map(_.toLong).getOrElse(4000000L)
+
   /** The only place a base file table is built: `files` (segment-
     * relative, default all) of `layout`, read as `format` (default the
     * layout's) under `schema` (default the recorded one). Avro files get
@@ -99,9 +107,11 @@ object ReadRoute {
 
   /** The only routing tree. Order matters: the uuid conversion seam
     * wraps everything below it (uuid + fills with no deletes rides the
-    * fill route, whose groups wrap themselves in the seam); live deletes
-    * come next because a scan must APPLY them (and the MOR wrappers
-    * inject fills below their probes); then fills, rename epochs, the
+    * fill route, whose groups wrap themselves in the seam); rename
+    * epochs come next because every other route would mis-serve
+    * pre-rename files' names (the epoch table applies live deletes per
+    * epoch); then live deletes, because a scan must APPLY them (and the
+    * MOR wrappers inject fills below their probes); then fills, the
     * mixed and avro formats, and the plain parquet/ORC stack. `serve`
     * decorates the read table before the v3 lineage wrap (the catalog's
     * write face). */
@@ -113,12 +123,14 @@ object ReadRoute {
       if (layout.uuidColumns.nonEmpty &&
           (layout.deleteFiles.nonEmpty || !layout.hasFills))
         new GraftUuidTable(spark, name, layout, opts)
+      // fills never coexist with renames (layout invariant); avro and
+      // mixed epochs dispatch per format inside
+      else if (layout.renameOps.nonEmpty &&
+          (layout.deleteFiles.nonEmpty || layout.dataFiles.exists(_.nonEmpty) ||
+            layout.dataFormat == "avro" || layout.dataFormat == "mixed"))
+        new GraftEpochTable(spark, name, layout, opts)
       else if (layout.deleteFiles.nonEmpty) {
-        // renames first: the plain mixed/avro MOR routes would
-        // mis-serve names
-        if (layout.renameOps.nonEmpty)
-          new GraftEpochMorTable(spark, name, layout, opts)
-        else if (layout.dataFormat == "mixed")
+        if (layout.dataFormat == "mixed")
           new GraftMixedFormatTable(spark, name, layout, opts)
         else if (layout.dataFormat == "avro")
           new GraftAvroMorTable(spark, name, layout, opts)
@@ -126,16 +138,9 @@ object ReadRoute {
         // away and restores the bucketed route
         else new GraftMorTable(fileTable(name, layout, opts), layout, opts)
       }
-      // fills never coexist with renames (layout invariant); the fill
-      // table groups files by (fill set, format), so mixed and avro
-      // fill layouts ride it too
+      // the fill table groups files by (fill set, format), so mixed and
+      // avro fill layouts ride it too
       else if (layout.hasFills) new GraftFillTable(spark, name, layout, opts)
-      // per-epoch scans serve pre-rename files under their physical
-      // names; avro and mixed epochs dispatch per format inside
-      else if (layout.renameOps.nonEmpty &&
-          (layout.dataFiles.exists(_.nonEmpty) ||
-            layout.dataFormat == "avro" || layout.dataFormat == "mixed"))
-        new GraftEpochTable(spark, name, layout, opts)
       else if (layout.dataFormat == "mixed")
         new GraftMixedFormatTable(spark, name, layout, opts)
       else if (layout.dataFormat == "avro") fileTable(name, layout, opts)

@@ -65,16 +65,14 @@ final class GraftUuidTable(spark: SparkSession, tableName: String,
     // un-materialized RENAMES (late round 20): the epoch machinery
     // plans INSIDE the conversion seam over the PHYSICAL schema — the
     // seam rewrites TYPES by position (names irrelevant to it), the
-    // epochs rewrite NAMES per file, and with live deletes the
-    // per-epoch MOR composition translates the delete files'
+    // epochs rewrite NAMES per file, and with live deletes each
+    // epoch's merge-on-read table translates the delete files'
     // current-named keys (binary uuid values probe content-comparable
     // either way).
-    if (layout.renameOps.nonEmpty) {
-      val sub = layout.copy(schemaDdl = Some(physical.toDDL))
-      if (layout.deleteFiles.isEmpty)
-        new GraftEpochTable(spark, tableName, sub, hadoopOpts)
-      else new GraftEpochMorTable(spark, tableName, sub, hadoopOpts)
-    } else {
+    if (layout.renameOps.nonEmpty)
+      new GraftEpochTable(spark, tableName,
+        layout.copy(schemaDdl = Some(physical.toDDL)), hadoopOpts)
+    else {
     val base = ReadRoute.fileTable(tableName, layout, hadoopOpts,
       schema = Some(physical))
     // uuid + live DELETES (late round 19): the merge-on-read wrapper
@@ -101,9 +99,8 @@ final class GraftUuidTable(spark: SparkSession, tableName: String,
     Set(TableCapability.BATCH_READ).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new UuidScanBuilder(inner.newScanBuilder(options)
-      .asInstanceOf[ScanBuilder with SupportsPushDownRequiredColumns
-        with SupportsPushDownCatalystFilters],
+    new UuidScanBuilder(
+      GroupedScan.pushDown(inner.newScanBuilder(options), tableName),
       uuidCols, physicalOf)
 }
 
@@ -112,9 +109,7 @@ final class GraftUuidTable(spark: SparkSession, tableName: String,
   * form) to the stock parquet builder; every filter is reported
   * unhandled so Spark re-evaluates above the conversion. */
 private final class UuidScanBuilder(
-    inner: ScanBuilder with SupportsPushDownRequiredColumns
-      with SupportsPushDownCatalystFilters,
-    uuidCols: Set[String], physicalOf: StructType => StructType)
+    inner: GroupedScan.PushDownBuilder, uuidCols: Set[String], physicalOf: StructType => StructType)
   extends ScanBuilder with SupportsPushDownRequiredColumns
   with SupportsPushDownCatalystFilters {
 

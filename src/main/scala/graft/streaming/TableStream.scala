@@ -8,10 +8,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxBytes, ReadMaxFiles, SupportsAdmissionControl}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.orc.OrcTable
@@ -21,6 +19,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.catalog.{Catalog, CatalogConfig, CatalogFactory, CatalogIO, IcebergFormat, SupportsTableVersions, TableRef}
+import graft.sources.GroupReaderFactory
 
 /** Structured Streaming FROM a graft catalog table (round 10): the
   * read twin of [[StreamMaterialize]]'s stream-INTO-table face, and the
@@ -232,43 +231,6 @@ private[streaming] final case class VersionOffset(v: Int) extends Offset {
   override def json(): String = v.toString
 }
 
-/** A micro-batch partition tagged with the index of the (per-format)
-  * stock reader factory that serves it — round 16, ORC appends: one
-  * batch may mix parquet and ORC files (a mixed table's history, or an
-  * adopted ORC base under an `earliest` bootstrap), and a parquet
-  * factory cannot decode ORC partitions. Same dispatch shape as
-  * [[graft.sources]]' epoch scan. */
-private[streaming] final case class StreamFilePartition(factory: Int,
-    files: FilePartition) extends InputPartition {
-  override def preferredLocations(): Array[String] = files.preferredLocations()
-}
-
-/** Dispatches each [[StreamFilePartition]] to its format's stock
-  * factory. `allColumnar` is the GLOBAL verdict computed at plan time:
-  * Spark requires every partition of a scan to agree
-  * (DataSourceV2ScanExecBase's all-or-none rule), and two formats'
-  * vectorization decisions can differ (per-format reader confs, nested
-  * types), so a mixed batch demotes to row-based unless EVERY
-  * partition of EVERY group vectorizes — the same rule
-  * [[graft.sources]]' mixed-format composite applies (round-16
-  * review). */
-private[streaming] final class StreamReaderFactory(
-    inners: Array[PartitionReaderFactory],
-    allColumnar: Boolean) extends PartitionReaderFactory {
-  private def unwrap(p: InputPartition): (PartitionReaderFactory, FilePartition) = {
-    val sp = p.asInstanceOf[StreamFilePartition]
-    (inners(sp.factory), sp.files)
-  }
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val (f, fp) = unwrap(p); f.createReader(fp)
-  }
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val (f, fp) = unwrap(p); f.createColumnarReader(fp)
-  }
-  override def supportColumnarReads(p: InputPartition): Boolean = allColumnar
-}
-
 /** Per-format stock scan construction shared by both micro-batch
   * sources: parquet and ORC appends stream (each through Spark's own
   * vectorized reader); anything else refuses loudly at plan time —
@@ -303,9 +265,11 @@ private[streaming] object StreamScans {
   }
 
   /** The shared per-batch plan of both micro-batch sources: one stock
-    * scan per (segment, format, fill-set) group, every partition tagged
-    * with its factory's index, plus the global columnar verdict (see
-    * [[StreamReaderFactory]]). `groups` = (data location, that
+    * scan per (segment, format, fill-set) group — one batch may mix
+    * parquet and ORC files (a mixed table's history, or an adopted ORC
+    * base under an `earliest` bootstrap), and a parquet factory cannot
+    * decode ORC partitions — concatenated as a grouped composite
+    * ([[GroupReaderFactory]]). `groups` = (data location, that
     * segment's batch files with their formats and per-file constant
     * fills — identity partition values of appended hive-layout files
     * that LACK the column, injected at the reader seam exactly like the
@@ -314,7 +278,7 @@ private[streaming] object StreamScans {
       hadoopConf: Map[String, String],
       groups: Seq[(String, Seq[(String, String, Seq[(String, Any)])])],
       uuidColumns: Set[String] = Set.empty)
-      : (Array[InputPartition], StreamReaderFactory) = {
+      : (Array[InputPartition], GroupReaderFactory) = {
     // adopted uuid layouts (round 20): the per-batch scans read the
     // PHYSICAL 16-byte binary form — the fixed[16] (or engine-appended
     // plain-binary) files refuse a string read schema — with fills
@@ -324,15 +288,11 @@ private[streaming] object StreamScans {
     val scanSchema =
       if (uuidColumns.isEmpty) tableSchema
       else graft.sources.UuidScan.physicalOf(tableSchema, uuidColumns)
-    val factories = Vector.newBuilder[PartitionReaderFactory]
-    val parts = Vector.newBuilder[InputPartition]
-    var fi = -1
-    var allColumnar = true
-    groups.foreach { case (loc, files) =>
+    GroupReaderFactory.plan(groups.flatMap { case (loc, files) =>
       files.groupBy(f => (f._2, f._3)).toSeq
         .sortBy { case ((fmt, fills), _) =>
           (fmt, fills.map(_._1).mkString(",")) }
-        .foreach { case ((fmt, fills), fs) =>
+        .map { case ((fmt, fills), fs) =>
           val abs = fs.map { case (f, _, _) =>
             new org.apache.hadoop.fs.Path(loc, f).toString }
           // RELOCATED spellings (round 18 — write.data.path layouts):
@@ -349,17 +309,9 @@ private[streaming] object StreamScans {
           val factory =
             if (uuidColumns.isEmpty) filled
             else graft.sources.UuidScan.wrap(filled, tableSchema, uuidColumns)
-          factories += factory
-          fi += 1
-          scan.toBatch.planInputPartitions().foreach { p =>
-            val fp = p.asInstanceOf[FilePartition]
-            allColumnar &&= factory.supportColumnarReads(fp)
-            parts += StreamFilePartition(fi, fp)
-          }
+          (scan.toBatch.planInputPartitions(), factory)
         }
-    }
-    (parts.result().toArray,
-      new StreamReaderFactory(factories.result().toArray, allColumnar))
+    })
   }
 }
 
@@ -544,9 +496,9 @@ private[streaming] final class GraftTableMicroBatchStream(cfg: CatalogConfig,
       // empty first batch: build a factory from the current layout (it
       // only carries schema + conf; partitions name their own files)
       val layout = CatalogIO.readLayout(cat.loadTableMetadataLocation(ref), conf)
-      new StreamReaderFactory(Array(StreamScans.scanOver(s"$ref-stream",
+      new GroupReaderFactory(Array(StreamScans.scanOver(s"$ref-stream",
         tableSchema, cfg.hadoopConf, "parquet", Nil, layout.dataLocation)
-        .toBatch.createReaderFactory()), allColumnar = false)
+        .toBatch.createReaderFactory()), columnar = false)
     }
   }
 
@@ -867,9 +819,9 @@ private[streaming] final class IcebergMicroBatchStream(cfg: CatalogConfig,
     else {
       val (loc, _) = currentMeta()
       val dataLoc = graft.catalog.CatalogIO.readLayout(loc, conf).dataLocation
-      new StreamReaderFactory(Array(StreamScans.scanOver(s"$ref-icestream",
+      new GroupReaderFactory(Array(StreamScans.scanOver(s"$ref-icestream",
         tableSchema, cfg.hadoopConf, "parquet", Nil, dataLoc)
-        .toBatch.createReaderFactory()), allColumnar = false)
+        .toBatch.createReaderFactory()), columnar = false)
     }
   }
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import javax.imageio.ImageIO
 import graft.operators.Multimodal
 
@@ -59,11 +58,7 @@ object M01Probe {
       }
     }
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val tmp = java.nio.file.Files.createTempDirectory("m01probe").toString
     for (useCache <- Seq(true, false)) {

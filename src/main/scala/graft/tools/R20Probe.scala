@@ -26,14 +26,7 @@ object R20Probe {
     val which = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.VectorFunctions.register(spark)
     which match {
@@ -356,7 +349,7 @@ object R20Probe {
     (1 to 2).foreach { i =>
       val tmp = java.nio.file.Files.createTempDirectory("graft-probe-w24").toString
       val t0 = System.nanoTime()
-      val meta = graft.catalog.IcebergExport.writeTable(s, t, s"$tmp/t",
+      graft.catalog.IcebergExport.writeTable(s, t, s"$tmp/t",
         partitionBy = Seq("rf"))
       val t1 = System.nanoTime()
       println(f"[probe] w24 writeTable (partitioned) run $i: ${(t1 - t0) / 1e9}%.3f s")

@@ -3,7 +3,7 @@ package graft.catalog
 import java.nio.file.Files
 
 import graft.TestSpark
-import graft.sources.{MergeOps, TempCatalog}
+import graft.sources.{GroupPartition, MergeOps, TempCatalog}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * for each route [[graft.sources.ReadRoute.of]] serves, the DataFrame
   * face (`CatalogIO.readTable`), the SQL face (`spark.table`) and
   * `VERSION AS OF <current>` return the same rows, and the SQL face
-  * plans the route's own scan. Where the DataFrame face is routed too,
+  * plans the route's own scan with the route's columnar verdict. Where the DataFrame face is routed too,
   * both faces plan the SAME scan class; plain parquet/ORC layouts and
   * the parquet merge-on-read / rename join path stay V1 on purpose
   * (`FileSourceScanExec`). */
@@ -52,26 +52,28 @@ class RouteParitySpec extends AnyFunSuite {
 
   private val routes = Seq(
     // the plain stack: a layout whose stats the pruning switch ignores
-    Route("plain", "ParquetScan", dataFrameV1 = true, (_, hc) =>
-      engine(hc, rows(40)), Map("spark.graft.stats.pruning" -> "false")),
-    Route("stats-pruned", "StatsPrunedScan", dataFrameV1 = true, (_, hc) =>
-      engine(hc, rows(40))),
-    Route("bucketed", "BucketedScan", dataFrameV1 = true, (_, hc) =>
-      engine(hc, rows(40), bucketBy = Some((4, Seq("k"))))),
-    Route("mor-parquet", "MorScan", dataFrameV1 = true, { (_, hc) =>
+    Route("plain", "ParquetScan", columnar = true, dataFrameV1 = true,
+      (_, hc) => engine(hc, rows(40)), Map("spark.graft.stats.pruning" -> "false")),
+    Route("stats-pruned", "StatsPrunedScan", columnar = true,
+      dataFrameV1 = true, (_, hc) => engine(hc, rows(40))),
+    Route("bucketed", "BucketedScan", columnar = true, dataFrameV1 = true,
+      (_, hc) => engine(hc, rows(40), bucketBy = Some((4, Seq("k"))))),
+    Route("mor-parquet", "MorScan", columnar = true, dataFrameV1 = true,
+      { (_, hc) =>
       engine(hc, rows(40))
       import spark.implicits._
       MergeOps.deleteMatchedMergeOnRead(spark, hc, ref,
         Seq(1L, 2L, 3L).toDF("k"), Seq("k"))
       hc.listTableVersions(ref).last.toString
     }),
-    Route("mor-orc", "MorScan", dataFrameV1 = false, (_, hc) =>
-      iceberg(hc, eqDeletes(IcebergExport.writeTable(spark, rows(40),
+    Route("mor-orc", "MorScan", columnar = true, dataFrameV1 = false,
+      (_, hc) => iceberg(hc, eqDeletes(IcebergExport.writeTable(spark, rows(40),
         icebergDir(), fileFormat = "orc")))),
-    Route("mor-avro", "AvroMorScan", dataFrameV1 = false, (_, hc) =>
-      iceberg(hc, eqDeletes(IcebergExport.writeTable(spark, rows(40),
+    Route("mor-avro", "AvroMorScan", columnar = false, dataFrameV1 = false,
+      (_, hc) => iceberg(hc, eqDeletes(IcebergExport.writeTable(spark, rows(40),
         icebergDir(), fileFormat = "avro")))),
-    Route("mor-mixed", "MixedScan", dataFrameV1 = false, { (_, hc) =>
+    Route("mor-mixed", "MixedScan", columnar = true, dataFrameV1 = false,
+      { (_, hc) =>
       val base = IcebergExport.writeTable(spark, rows(40), icebergDir(),
         fileFormat = "orc")
       iceberg(hc, eqDeletes(
@@ -79,26 +81,35 @@ class RouteParitySpec extends AnyFunSuite {
     }),
     // identity-partitioned export: the files lack `s`, which serves as
     // a per-file constant fill
-    Route("fills", "FillScan", dataFrameV1 = false, (_, hc) =>
-      iceberg(hc, IcebergExport.writeTable(spark, rows(40), icebergDir(),
+    Route("fills", "FillScan", columnar = true, dataFrameV1 = false,
+      (_, hc) => iceberg(hc, IcebergExport.writeTable(spark, rows(40), icebergDir(),
         partitionBy = Seq("s")))),
-    Route("epochs", "EpochScan", dataFrameV1 = true, { (cat, hc) =>
+    Route("epochs", "EpochScan", columnar = true, dataFrameV1 = true,
+      { (cat, hc) =>
       engine(hc, rows(40))
       renameAndAppend(cat, hc)
     }),
-    Route("epoch-mor", "EpochMorScan", dataFrameV1 = true, { (cat, hc) =>
+    Route("epoch-mor", "EpochScan", columnar = true, dataFrameV1 = true,
+      { (cat, hc) =>
       engine(hc, rows(40))
       renameAndAppend(cat, hc)
       import spark.implicits._
       MergeOps.deleteMatchedMergeOnRead(spark, hc, ref,
         Seq(1L, 2L, 101L).toDF("k"), Seq("k"))
       hc.listTableVersions(ref).last.toString
-    }),
-    Route("uuid", "UuidScan", dataFrameV1 = false, (_, hc) =>
-      iceberg(hc, UuidSpec.writeTable(conf, icebergDir(),
+    }, epochInner = Some("MorFilePartition")),
+    // a row-only avro group demotes the whole mixed scan to rows
+    Route("mixed-avro", "MixedScan", columnar = false, dataFrameV1 = false,
+      { (_, hc) =>
+        val base = IcebergExport.writeTable(spark, rows(40), icebergDir())
+        iceberg(hc, IcebergExport.appendSnapshot(spark, rows(10, 100), base,
+          fileFormat = "avro"))
+      }),
+    Route("uuid", "UuidScan", columnar = false, dataFrameV1 = false,
+      (_, hc) => iceberg(hc, UuidSpec.writeTable(conf, icebergDir(),
         """{"id": 1, "name": "u", "required": false, "type": "uuid"}"""))),
-    Route("lineage", "AvroScan", dataFrameV1 = false, (_, hc) =>
-      iceberg(hc, IcebergExport.writeTable(spark, rows(40), icebergDir(),
+    Route("lineage", "AvroScan", columnar = false, dataFrameV1 = false,
+      (_, hc) => iceberg(hc, IcebergExport.writeTable(spark, rows(40), icebergDir(),
         fileFormat = "avro", formatVersion = 3))))
 
   private def renameAndAppend(cat: String, hc: HadoopFsCatalog): String = {
@@ -113,6 +124,17 @@ class RouteParitySpec extends AnyFunSuite {
         case a: Array[Byte] => a.mkString(",")
         case v => String.valueOf(v)
       }.mkString("|")).toSeq.sorted
+
+  private def batchScanOf(df: DataFrame): BatchScanExec =
+    df.queryExecution.sparkPlan.collectFirst { case b: BatchScanExec => b }
+      .getOrElse(fail(s"no DSv2 scan in ${df.queryExecution.sparkPlan}"))
+
+  /** The partition classes a grouped composite's groups plan. */
+  private def groupInnerOf(df: DataFrame): Set[String] =
+    batchScanOf(df).scan.toBatch.planInputPartitions().map {
+      case g: GroupPartition => g.inner.getClass.getSimpleName
+      case other => fail(s"not a grouped partition: $other")
+    }.toSet
 
   private def scanOf(df: DataFrame): String =
     df.queryExecution.sparkPlan.collectFirst {
@@ -136,6 +158,12 @@ class RouteParitySpec extends AnyFunSuite {
         assert(sorted(history) == expected, s"${r.name}: VERSION AS OF $version")
         assert(scanOf(sqlFace) == r.sqlScan, s"${r.name}: SQL face scan")
         assert(scanOf(history) == r.sqlScan, s"${r.name}: VERSION AS OF scan")
+        assert(batchScanOf(sqlFace).supportsColumnar == r.columnar,
+          s"${r.name}: SQL face columnar")
+        assert(batchScanOf(history).supportsColumnar == r.columnar,
+          s"${r.name}: VERSION AS OF columnar")
+        r.epochInner.foreach(p => assert(groupInnerOf(sqlFace) == Set(p),
+          s"${r.name}: every epoch plans $p"))
         val dfScan = scanOf(dfFace)
         if (r.dataFrameV1) assert(dfScan == "FileSourceScanExec",
           s"${r.name}: the DataFrame face stays V1")
@@ -148,8 +176,12 @@ class RouteParitySpec extends AnyFunSuite {
 object RouteParitySpec {
   /** One route fixture: builds its table as `db.t` in the temp catalog
     * and returns the `VERSION AS OF` literal of its current state;
-    * `confs` hold for the whole case. */
+    * `columnar` is the SQL face's expected `supportsColumnar`;
+    * `epochInner`, when set, the partition class every rename epoch
+    * plans; `confs` hold for the whole case. */
   private final case class Route(name: String, sqlScan: String,
-      dataFrameV1: Boolean, build: (String, HadoopFsCatalog) => String,
-      confs: Map[String, String] = Map.empty)
+      columnar: Boolean, dataFrameV1: Boolean,
+      build: (String, HadoopFsCatalog) => String,
+      confs: Map[String, String] = Map.empty,
+      epochInner: Option[String] = None)
 }

@@ -55,6 +55,20 @@ class RenameColumnSpec extends AnyFunSuite {
       .collect().map(_.mkString("|")).sorted.toSeq == Seq("1|a", "2|b", "3|c"))
   }
 
+  test("a mixed-case rename target keeps its case: the epoch scan serves " +
+      "the current schema's names") {
+    val (cat, _) = freshCatalog()
+    spark.sql(s"CREATE NAMESPACE $cat.db")
+    spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, val STRING) USING parquet")
+    spark.sql(s"INSERT INTO $cat.db.t VALUES (1, 'a'), (2, 'b')")
+    spark.sql(s"ALTER TABLE $cat.db.t RENAME COLUMN val TO Label")
+    spark.sql(s"INSERT INTO $cat.db.t VALUES (3, 'c')")
+    assert(spark.table(s"$cat.db.t").columns.toSeq == Seq("k", "Label"))
+    assert(rowsOf(s"$cat.db.t") == Seq("1|a", "2|b", "3|c"))
+    assert(spark.sql(s"SELECT Label FROM $cat.db.t WHERE Label >= 'b'")
+      .collect().map(_.getString(0)).sorted.toSeq == Seq("b", "c"))
+  }
+
   test("every version time-travels with its own schema; chained renames resolve") {
     val (cat, hc) = freshCatalog()
     spark.sql(s"CREATE NAMESPACE $cat.db")
@@ -252,7 +266,6 @@ class RenameColumnSpec extends AnyFunSuite {
       "per-epoch spills translate delete keys to physical names") {
     val (cat, hc) = freshCatalog()
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     spark.sql(s"CREATE NAMESPACE $cat.db")
     spark.sql(s"CREATE TABLE $cat.db.ro (k BIGINT, val STRING) USING parquet")
     spark.sql(s"INSERT INTO $cat.db.ro SELECT id, concat('v', id % 7) " +
